@@ -338,6 +338,12 @@ def _build_ifd(entries: list[tuple[int, int, int, bytes]]) -> bytes:
     )
 
 
+#: leading bytes of the containers scrub_exif rewrites: GIF, TIFF, PNG, JPEG
+SCRUB_MAGICS = (
+    b"GIF87a", b"GIF89a", b"II*\x00", b"MM\x00*", b"\x89PNG\r\n\x1a\n", b"\xff\xd8"
+)
+
+
 def scrub_exif(data: bytes) -> bytes:
     """Rewrite a JPEG's APP1 Exif segment to contain ONLY the whitelisted
     safe tags (see module docstring) — GPS, MakerNotes, serials and every

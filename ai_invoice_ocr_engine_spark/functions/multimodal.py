@@ -1004,22 +1004,30 @@ def exif_meta(media: DataFrame) -> DataFrame:
 
 
 def scrub_gps(media: DataFrame) -> DataFrame:
-    """The image-privacy pass: rewrite every JPEG's EXIF to the safe-tag
-    whitelist (GPS/MakerNotes/serials gone by construction, pixels
-    untouched — exif.py scrub_exif); non-JPEG media pass through
-    unchanged. Same (media_ref, image) schema out, so the scrub composes
-    anywhere in a media pipeline."""
-    from ..exif import scrub_exif
+    """The image-privacy pass: rewrite every JPEG/PNG/GIF/TIFF's metadata
+    to the safe-tag whitelist (GPS/MakerNotes/serials gone by
+    construction, pixels untouched — exif.py scrub_exif); bytes of any
+    other container pass through unchanged. Fails closed: a frame of a
+    known container that cannot be scrubbed (a geo-tagged TIFF, a torn
+    header) raises ValueError naming its media_ref instead of emitting
+    the original bytes. Same (media_ref, image) schema out, so the scrub
+    composes anywhere in a media pipeline."""
+    from ..exif import SCRUB_MAGICS, scrub_exif
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for img in pdf["image"]:
+            for ref, img in zip(pdf["media_ref"], pdf["image"]):
                 b = bytes(img)
-                try:
-                    out.append(bytearray(scrub_exif(b)))
-                except Exception:
-                    out.append(bytearray(b))
+                if b.startswith(SCRUB_MAGICS):
+                    try:
+                        b = scrub_exif(b)
+                    except Exception as e:
+                        raise ValueError(
+                            f"media_ref {ref!r}: metadata scrub failed "
+                            f"({type(e).__name__}: {e})"
+                        ) from e
+                out.append(bytearray(b))
             pdf = pdf.copy()
             pdf["image"] = out
             yield pdf

@@ -1,6 +1,6 @@
 """The Spark extraction job: media join → vectorized extract → lineage/resume.
 
-Plan shape (what Catalyst sees, SURVEY.md §3.1; frames strategy, default):
+Plan shape (what Catalyst sees, SURVEY.md §3.1):
 
     scan(documents) → explode → filter(kind='media') → distinct refs
         → repartition → mapInPandas(OCR per distinct frame)   [CPU stage]
@@ -9,23 +9,18 @@ Plan shape (what Catalyst sees, SURVEY.md §3.1; frames strategy, default):
 
     Frame bytes reach the OCR stage either through a semi join + byte
     shuffle, or (media_side_path) via a once-per-node mmap blob with only
-    ref strings shuffling — the at-scale default (see extract_frames).
+    ref strings shuffling (see extract).
 
 Scale design decisions:
-  * The Python boundary is crossed ONCE per document batch — a single fused
-    mapInPandas does decode→detect→recognize→layout (SURVEY.md §4, the
-    JVM↔Python Arrow tax is the dominant cost per the CIDR'22 UDF paper).
-  * Media side: 'auto'/'frames' (the default frame-deduplicated plan —
-    OCR once per distinct media_ref, merge in Catalyst), 'broadcast'
-    (media dict shipped once per executor — zero shuffle, only valid while
-    the media table fits in memory) or 'join' (explode + equi-join +
-    re-group; AQE plans broadcast vs SMJ and splits skewed doc_id groups).
-  * Media bytes are deduplicated per (doc_id, media_ref) BEFORE the join so
-    a doc referencing the same frame twice ships it once.
-  * Skew: media-heavy documents cluster into few bucket(doc_id) partitions
-    (fixture skew tier); the pre-extract repartition key is
-    (bucket, salt=pmod(xxhash64(doc_id, run_id), S)) so those buckets fan
-    out over S tasks.
+  * The Python boundary is crossed ONCE per distinct media frame — a
+    single fused mapInPandas does decode→detect→recognize→layout (SURVEY.md
+    §4, the JVM↔Python Arrow tax is the dominant cost per the CIDR'22 UDF
+    paper); merging OCR lines back into documents stays in Catalyst.
+  * Skew: OCR cost is keyed by media_ref, not doc_id. The distinct frames
+    are repartitioned to full core width before OCR, so media-heavy
+    documents do not pile their frames onto one task, and the doc-side
+    merge is a hash groupBy(doc_id) that spreads those documents on its
+    own.
   * Lineage rows (partition_id, doc_count, span_count, checksum) are written
     per completed run; resume anti-joins documents against completed
     buckets (J3 of SURVEY.md §2.3) and processes only the remainder.
@@ -46,7 +41,6 @@ from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -55,35 +49,6 @@ from pyspark.sql.types import (
 from .config import ExtractConfig
 from . import kernels as K
 from . import snapshots
-from .extractor import extract_doc
-
-# largest media table extract(media_strategy="broadcast") will collect to
-# the driver; above this the caller is redirected to the frames/blob plans
-_BROADCAST_MEDIA_CAP_BYTES = 2 << 30  # 2 GiB
-
-RESULT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField(
-            "spans_out",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("kind", StringType()),
-                        StructField("text", StringType()),
-                        StructField("media_ref", StringType()),
-                        StructField("order", IntegerType()),
-                    ]
-                )
-            ),
-        ),
-        StructField("invoice_fields", MapType(StringType(), StringType())),
-        StructField("n_spans_in", IntegerType()),
-        StructField("n_media", IntegerType()),
-        StructField("n_media_missing", IntegerType()),
-        StructField("n_ocr", IntegerType()),
-    ]
-)
 
 LINEAGE_SCHEMA = StructType(
     [
@@ -120,8 +85,8 @@ def build_media_blob(media_parquet: str, cache_dir: str | None = None) -> str:
 
     # Accept both a single parquet file and a directory-style parquet (the
     # shape Spark itself writes): a dir expands to its sorted part files so
-    # `extract --media <spark-written-dir>` works in the default frames
-    # strategy, not only via the byte-shuffle path.
+    # `extract --media <spark-written-dir>` works with blob delivery, not
+    # only via the byte-shuffle path.
     if os.path.isdir(media_parquet):
         parts = sorted(
             os.path.join(dp, fn)
@@ -196,49 +161,6 @@ def _load_media_side(blob_path: str) -> _BlobLookup:
     return lookup
 
 
-def _run_extract_batches(
-    batches: Iterator[pd.DataFrame],
-    cfg: ExtractConfig,
-    media_bc=None,
-    weights_bc=None,
-    media_side_path: str | None = None,
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body. Executed on executors; weights come from the
-    broadcast when provided (north_star: broadcast of model weights), else
-    are re-derived from the frozen seed via the per-worker module cache
-    (/root/reference/engine.py:17-21 singleton pattern, SURVEY.md §4)."""
-    weights = weights_bc.value if weights_bc is not None else K.resolve_weights(cfg.rec)
-    if media_side_path is not None:
-        media_lookup = _load_media_side(media_side_path)
-    else:
-        media_lookup = media_bc.value if media_bc is not None else None
-    for pdf in batches:
-        out = {k.name: [] for k in RESULT_SCHEMA.fields}
-        has_media_col = "__media" in pdf.columns
-        for i in range(len(pdf)):
-            spans = pdf["spans"].iloc[i]
-            if media_lookup is not None:
-                lookup = media_lookup
-            elif has_media_col:
-                ml = pdf["__media"].iloc[i]
-                lookup = (
-                    {m["media_ref"]: m["image"] for m in ml} if ml is not None else {}
-                )
-            else:
-                lookup = {}
-            res = extract_doc(
-                list(spans) if spans is not None else [], lookup, cfg, weights
-            )
-            out["doc_id"].append(pdf["doc_id"].iloc[i])
-            out["spans_out"].append(res["spans_out"])
-            out["invoice_fields"].append(res["invoice_fields"])
-            out["n_spans_in"].append(res["n_spans_in"])
-            out["n_media"].append(res["n_media"])
-            out["n_media_missing"].append(res["n_media_missing"])
-            out["n_ocr"].append(res["n_ocr"])
-        yield pd.DataFrame(out)
-
-
 OCR_FRAME_SCHEMA = StructType(
     [
         StructField("media_ref", StringType()),
@@ -250,7 +172,7 @@ OCR_FRAME_SCHEMA = StructType(
 def _ocr_frame_batches(
     batches: Iterator[pd.DataFrame],
     cfg: ExtractConfig,
-    weights_bc=None,
+    weights_bc,
     media_side_path: str | None = None,
 ) -> Iterator[pd.DataFrame]:
     """Per-FRAME OCR: media_ref[+image] → flat reading-order line texts.
@@ -262,9 +184,7 @@ def _ocr_frame_batches(
     like the semi join dropping them."""
     from .extractor import assemble_frame_lines, frame_geometry
 
-    weights = (
-        weights_bc.value if weights_bc is not None else K.resolve_weights(cfg.rec)
-    )
+    weights = weights_bc.value
     blob = _load_media_side(media_side_path) if media_side_path is not None else None
     for pdf in batches:
         if blob is not None:
@@ -362,19 +282,20 @@ def _media_plan_transforms_bytes(media: DataFrame) -> bool:
     )
 
 
-def extract_frames(
+def extract(
     docs: DataFrame,
     media: DataFrame,
     cfg: ExtractConfig | None = None,
-    broadcast_weights: bool = True,
     media_side_path: str | None = None,
 ) -> DataFrame:
-    """Frame-deduplicated extraction — the at-scale plan (and default).
+    """documents × media → extracted span sequences, one row per doc:
+    (doc_id, spans_out array<struct<kind, text, media_ref, order>>,
+    invoice_fields map, n_spans_in, n_media, n_media_missing, n_ocr).
 
     Python is crossed once per DISTINCT media frame (an 8 k-occurrence /
-    2.4 k-frame corpus does 3.7× less OCR than the per-document plan, and a
-    10^12-doc web corpus reuses frames far more). Everything else is pure
-    Catalyst:
+    2.4 k-frame corpus does 3.7× less OCR than OCR per document occurrence,
+    and a 10^12-doc web corpus reuses frames far more). Everything else is
+    pure Catalyst:
 
         media ⋉ needed_refs → mapInPandas(OCR per frame)   [CPU stage]
         docs → posexplode_outer(spans) ⋈ ocr(media_ref)     [AQE-planned]
@@ -388,15 +309,15 @@ def extract_frames(
     balance repartition into the OCR stage (the general path when the
     media table exceeds node-local storage). CONSTRAINT on blob mode: the
     bytes OCR'd are read from the parquet at ``media_side_path``; the
-    ``media`` DataFrame only gates WHICH refs run. If you transform image
-    bytes in the DataFrame (e.g. resize_frames), pass
-    ``media_side_path=None`` so the transformed bytes ride the shuffle —
-    otherwise the on-disk originals are used. Either way only small text
-    flows through the doc-side join. The reading-order/boilerplate
-    semantics live in the frame UDF (shared kernels), so output is
-    bit-identical to the per-document oracle — each duplicate occurrence of
-    a frame expands to the same lines, exactly as the reference recomputes
-    it per document (/root/reference/engine.py:49-55, pure function).
+    ``media`` DataFrame only gates WHICH refs run. A media DataFrame that
+    transforms image bytes (e.g. resize_frames) is refused in blob mode
+    with a ValueError; pass ``media_side_path=None`` so the transformed
+    bytes ride the shuffle. Either way only small text flows through the
+    doc-side join. The reading-order/boilerplate semantics live in the
+    frame UDF (shared kernels), so output is bit-identical to the
+    per-document oracle — each duplicate occurrence of a frame expands to
+    the same lines, exactly as the reference recomputes it per document
+    (a pure function of the frame bytes).
     """
     cfg = cfg or ExtractConfig()
     spark = docs.sparkSession
@@ -404,9 +325,7 @@ def extract_frames(
     target_parallelism = max(
         sc.defaultParallelism, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     )
-    weights_bc = (
-        sc.broadcast(K.resolve_weights(cfg.rec)) if broadcast_weights else None
-    )
+    weights_bc = sc.broadcast(K.resolve_weights(cfg.rec))
 
     needed = (
         docs.select(F.explode("spans").alias("s"))
@@ -539,118 +458,6 @@ def extract_frames(
     )
 
 
-def extract(
-    docs: DataFrame,
-    media: DataFrame,
-    cfg: ExtractConfig | None = None,
-    media_strategy: str = "auto",
-    broadcast_weights: bool = True,
-    media_side_path: str | None = None,
-) -> DataFrame:
-    """documents × media → extracted span sequences (RESULT_SCHEMA).
-
-    ``media_strategy``: 'frames' (and 'auto', the default) = the
-    frame-deduplicated plan of extract_frames — OCR once per distinct
-    media_ref, merge in Catalyst. 'broadcast' / 'join' = the per-document
-    plans (each doc's UDF call receives its own media bytes) — kept as
-    testing seams and for corpora with no frame reuse.
-
-    ``media_side_path``: parquet path of the media table. For 'frames' it
-    selects blob delivery (only ref strings shuffle; bytes come from a
-    once-per-node mmap blob — the fastest path, see extract_frames). For
-    'broadcast' it replaces the driver collect+pickle broadcast with the
-    same per-node blob."""
-    cfg = cfg or ExtractConfig()
-    spark = docs.sparkSession
-    sc = spark.sparkContext
-
-    if media_strategy in ("auto", "frames"):
-        # frame-deduplicated plan: the default — see extract_frames
-        return extract_frames(
-            docs,
-            media,
-            cfg,
-            broadcast_weights=broadcast_weights,
-            media_side_path=media_side_path,
-        )
-
-    weights_bc = (
-        sc.broadcast(K.resolve_weights(cfg.rec)) if broadcast_weights else None
-    )
-
-    # The documents table is narrow (text-only) so a small corpus arrives in
-    # very few input splits; the extract stage is CPU-bound, so fan it out to
-    # the full core count before crossing into Python. (At 100 TB the scan
-    # itself produces thousands of splits and this repartition collapses to
-    # a no-op round-robin of already-wide input.)
-    target_parallelism = max(
-        sc.defaultParallelism, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    )
-
-    if media_strategy == "broadcast":
-        if media_side_path is not None:
-            if _media_plan_transforms_bytes(media):
-                raise ValueError(
-                    "media_side_path (blob mode) reads image bytes from the "
-                    "on-disk parquet, but this media DataFrame COMPUTES its "
-                    "image column — pass media_side_path=None so the "
-                    "transformed bytes are collected instead."
-                )
-            blob_path = build_media_blob(media_side_path)
-            fn = lambda it: _run_extract_batches(  # noqa: E731
-                it, cfg, weights_bc=weights_bc, media_side_path=blob_path
-            )
-        else:
-            # Hard cap before collecting the media table to the driver: this
-            # strategy is the SMALL-media testing seam; at web scale the
-            # collect below would OOM the driver long before the executors
-            # noticed. Estimate from the table's own stats (count × avg
-            # byte length — one cheap aggregate, no bytes moved) and refuse
-            # loudly, pointing at the plans that do scale.
-            est = media.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.avg(F.length("image")).alias("avg_len"),
-            ).collect()[0]
-            est_bytes = int((est["n"] or 0) * (est["avg_len"] or 0.0))
-            if est_bytes > _BROADCAST_MEDIA_CAP_BYTES:
-                raise ValueError(
-                    f"media_strategy='broadcast' would collect ~{est_bytes:,}"
-                    f" bytes of media to the driver (cap "
-                    f"{_BROADCAST_MEDIA_CAP_BYTES:,}); use the default "
-                    "'frames' plan, or pass media_side_path for node-local "
-                    "blob delivery"
-                )
-            lookup = {
-                r["media_ref"]: bytes(r["image"])
-                for r in media.select("media_ref", "image").collect()
-            }
-            media_bc = sc.broadcast(lookup)
-            fn = lambda it: _run_extract_batches(it, cfg, media_bc=media_bc, weights_bc=weights_bc)  # noqa: E731
-        work = docs.select("doc_id", "spans")
-        if work.rdd.getNumPartitions() < target_parallelism:
-            work = work.repartition(target_parallelism)
-        return work.mapInPandas(fn, RESULT_SCHEMA)
-
-    # join strategy: ship each doc exactly the frames it references
-    needed = (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == F.lit("media"))
-        .select("doc_id", F.col("s.media_ref").alias("media_ref"))
-        .distinct()  # dedupe duplicate refs within a doc before shipping bytes
-    )
-    doc_media = (
-        needed.join(media.select("media_ref", "image"), "media_ref", "inner")
-        .groupBy("doc_id")
-        .agg(F.collect_list(F.struct("media_ref", "image")).alias("__media"))
-    )
-    enriched = docs.select("doc_id", "spans").join(doc_media, "doc_id", "left")
-    # AQE may coalesce the small join output below the core count; the
-    # extract stage is CPU-bound, so hold it at full width.
-    enriched = enriched.repartition(target_parallelism, "doc_id")
-    fn = lambda it: _run_extract_batches(it, cfg, weights_bc=weights_bc)  # noqa: E731
-    return enriched.mapInPandas(fn, RESULT_SCHEMA)
-
-
 def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     """partition_id = pmod(xxhash64(doc_id), P) — FIXTURES.md §4."""
     return df.withColumn(
@@ -690,8 +497,8 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(conf).exists(p)
 
 
-#: bucket layout identifier recorded in the run manifest (sources/tables.py:
-#: Iceberg's bucket transform is murmur3-based and assigns doc_ids to
+#: bucket layout identifier recorded in the run manifest (an Iceberg
+#: bucket(P, doc_id) transform is murmur3-based and would assign doc_ids to
 #: DIFFERENT bucket numbers — one table must never mix the two layouts)
 BUCKET_LAYOUT = "parquet-xxhash64"
 
@@ -803,9 +610,7 @@ def run_extract(
     out_dir: str,
     cfg: ExtractConfig | None = None,
     num_buckets: int = 32,
-    salt: int = 4,
     resume: bool = True,
-    media_strategy: str = "auto",
     run_id: str | None = None,
 ) -> dict:
     """End-to-end job: read → (resume filter) → extract → bucketed write +
@@ -833,25 +638,12 @@ def run_extract(
             skipped = done.count()
             docs = docs.join(done, "bucket", "left_anti")  # J3: resume anti-join
 
-    if media_strategy in ("broadcast", "join"):
-        # per-document plans are CPU-bound on doc partitions: salt spreads
-        # skewed (media-heavy) buckets across `salt` tasks each
-        docs = docs.withColumn(
-            "__salt", F.pmod(F.xxhash64("doc_id", F.lit(run_id)), F.lit(salt))
-        ).repartition(
-            max(spark.sparkContext.defaultParallelism, num_buckets), "bucket", "__salt"
-        )
-    # (frames plan: OCR cost is keyed by media_ref, not doc_id — frame
-    # repartitioning inside extract_frames is the skew treatment, and the
-    # doc-side groupBy hash-distributes media-heavy docs on its own)
-
     t0 = time.time()
     result = with_bucket(
         extract(
             docs,
             media,
             cfg,
-            media_strategy=media_strategy,
             media_side_path=media_path if "://" not in media_path else None,
         ),
         num_buckets,
@@ -927,7 +719,6 @@ def upsert_extract(
     media_path: str | None = None,
     where: str = "",
     cfg: ExtractConfig | None = None,
-    media_strategy: str = "auto",
     run_id: str | None = None,
     delete: bool = False,
 ) -> dict:
@@ -978,7 +769,6 @@ def upsert_extract(
                 sel,
                 media,
                 cfg,
-                media_strategy=media_strategy,
                 media_side_path=media_path if "://" not in media_path else None,
             ),
             num_buckets,
@@ -1415,12 +1205,12 @@ def rebucket_spans(
 
 def bucket_stats(spark: SparkSession, out_dir: str) -> dict:
     """Per-bucket layout/skew report — the decision input for ``compact``
-    (files per bucket) and for salting (row skew). File counts/bytes come
+    (files per bucket) and for ``rebucket`` (row skew). File counts/bytes come
     from a listing; row counts from the lineage SUMS (no data scan at
     all — the report is O(partitions) however large the table is).
-    skew = max/mean of per-bucket rows; >2 is the usual salt-or-split
-    signal (AQE handles it at join time, the layout fix is num_buckets
-    or salting at write)."""
+    skew = max/mean of per-bucket rows; >2 is the usual split signal
+    (AQE handles it at join time, the layout fix is a larger num_buckets
+    via rebucket_spans)."""
     spans_dir = os.path.join(out_dir, "spans")
     per: dict[int, list[int]] = {}
     for path, size in _list_parquet_files(spark, spans_dir):

@@ -6,11 +6,9 @@ Iceberg's real value beyond partitioning is its METADATA layer: every
 commit produces an immutable snapshot (a manifest of data files), so the
 table can be read as-of any retained snapshot, rolled back after a bad
 write, diffed for incremental (CDC) consumption, and vacuumed of files no
-retained snapshot references. On a cluster with the Iceberg runtime, all
-of this is delegated to Iceberg itself (``sources/tables.py`` routes
-``iceberg://`` targets to ``writeTo``; snapshots come from the catalog).
-This module provides the same contract for the parquet layout the sandbox
-runs on:
+retained snapshot references. An Iceberg table gets all of this from its
+catalog; this module provides the same contract for the parquet layout
+the engine writes:
 
     {out_dir}/_snapshots/snap-00000001.json   one immutable manifest per commit
     {out_dir}/_archive/<relpath>              retired data files (time travel)

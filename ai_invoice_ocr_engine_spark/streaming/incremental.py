@@ -37,7 +37,6 @@ def incremental_extract(
     checkpoint_dir: str,
     cfg: ExtractConfig | None = None,
     num_buckets: int = 32,
-    media_strategy: str = "broadcast",
     trigger_once: bool = True,
 ):
     """Start (and by default run-once) the incremental extraction stream.
@@ -101,9 +100,7 @@ def incremental_extract(
             todo = batch_df.join(existing, "doc_id", "left_anti")
             if todo.isEmpty():
                 return
-        result = with_bucket(
-            extract(todo, media, cfg, media_strategy=media_strategy), num_buckets
-        )
+        result = with_bucket(extract(todo, media, cfg), num_buckets)
         result.persist()
         try:
             n_docs = result.count()

@@ -64,7 +64,6 @@ def run_extract_bench(spark, docs_path: str, media_path: str) -> tuple[float, in
             docs,
             media,
             ExtractConfig(),
-            media_strategy="frames",
             media_side_path=media_path,
         )
         .agg(

@@ -170,6 +170,30 @@ def test_spark_exif_meta_and_scrub_gps(spark):
     )
 
 
+def test_scrub_gps_fails_closed_on_unscrubbable_tiff(spark):
+    """A geo-tagged TIFF cannot be scrubbed in place: the DataFrame pass
+    must raise naming the frame, never emit the original GPS bytes.
+    Bytes of no known container still pass through unchanged."""
+    from ai_invoice_ocr_engine_spark.functions.multimodal import scrub_gps
+
+    tiff = _gps_exif_app1("MM")[6:]
+    assert parse_exif(tiff)["has_gps"]
+    media = spark.createDataFrame(
+        [("geo_tiff", bytearray(tiff))], "media_ref string, image binary"
+    )
+    with pytest.raises(Exception, match="geo_tiff") as ei:
+        scrub_gps(media).collect()
+    assert "ValueError" in str(ei.value)
+
+    other = spark.createDataFrame(
+        [("raw", bytearray(b"not an image container"))],
+        "media_ref string, image binary",
+    )
+    assert bytes(scrub_gps(other).collect()[0]["image"]) == (
+        b"not an image container"
+    )
+
+
 @pytest.mark.skipif(not glob.os.path.exists(_OS_PLAIN_JPG),
                     reason="OS plain JPEG absent")
 def test_exif_cli_census_and_scrub(tmp_path):

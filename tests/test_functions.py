@@ -201,7 +201,6 @@ def test_incremental_stream_matches_batch(spark, corpus, tmp_path):
             spark.read.parquet(corpus["docs_path"]),
             spark.read.parquet(corpus["media_path"]),
             ExtractConfig(),
-            media_strategy="broadcast",
         ).collect()
     )
     assert_span_equal(got, want)

@@ -30,7 +30,7 @@ def _run(spark, corpus, batch_size, partitions):
         )
         media = spark.read.parquet(corpus["media_path"])
         return spans_key(
-            extract(docs, media, ExtractConfig(), media_strategy="broadcast").collect()
+            extract(docs, media, ExtractConfig()).collect()
         )
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)

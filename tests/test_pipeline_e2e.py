@@ -1,6 +1,6 @@
 """End-to-end golden tests (SURVEY.md §5.2(3)): the Spark pipeline must
 reproduce the single-process oracle's span sequences exactly, under both
-media strategies, including all edge documents."""
+byte deliveries (shuffle and mmap blob), including all edge documents."""
 
 import pytest
 
@@ -16,11 +16,11 @@ def golden(corpus):
     return spans_key(O.run_oracle(corpus["docs"], corpus["media"], ExtractConfig()))
 
 
-@pytest.mark.parametrize("strategy", ["frames", "broadcast", "join"])
-def test_golden_equality(spark, corpus, golden, strategy):
+def test_golden_equality(spark, corpus, golden):
+    """Shuffle delivery: frame bytes ride the repartition into OCR."""
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
-    result = extract(docs, media, ExtractConfig(), media_strategy=strategy)
+    result = extract(docs, media, ExtractConfig())
     actual = spans_key(result.collect())
     assert_span_equal(actual, golden)
 
@@ -34,7 +34,6 @@ def test_golden_equality_frames_blob_side_input(spark, corpus, golden):
         docs,
         media,
         ExtractConfig(),
-        media_strategy="frames",
         media_side_path=corpus["media_path"],
     )
     assert_span_equal(spans_key(result.collect()), golden)
@@ -65,30 +64,9 @@ def test_invoice_fields_match_oracle(spark, corpus):
     golden_fields = {r["doc_id"]: dict(r["invoice_fields"]) for r in rows}
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
-    result = extract(docs, media, cfg, media_strategy="broadcast")
+    result = extract(docs, media, cfg)
     for r in result.select("doc_id", "invoice_fields").collect():
         assert dict(r["invoice_fields"] or {}) == golden_fields[r["doc_id"]]
-
-
-def test_broadcast_media_cap_refuses_oversized_collect(spark, corpus, monkeypatch):
-    """VERDICT r3 'what's wrong' #3: the broadcast strategy collects the
-    media table to the driver; above the size cap it must refuse loudly
-    (pointing at the scaling plans) instead of OOMing the driver at 100x."""
-    import pytest
-
-    from ai_invoice_ocr_engine_spark import pipeline as P
-
-    docs = spark.read.parquet(corpus["docs_path"])
-    media = spark.read.parquet(corpus["media_path"])
-    monkeypatch.setattr(P, "_BROADCAST_MEDIA_CAP_BYTES", 1024)
-    with pytest.raises(ValueError, match="frames"):
-        P.extract(docs, media, ExtractConfig(), media_strategy="broadcast")
-    # blob delivery bypasses the driver collect, so the cap does not apply
-    out = P.extract(
-        docs, media, ExtractConfig(), media_strategy="broadcast",
-        media_side_path=corpus["media_path"],
-    )
-    assert out.count() == docs.count()
 
 
 def test_blob_mode_respects_filtered_media(spark, corpus):
@@ -99,12 +77,11 @@ def test_blob_mode_respects_filtered_media(spark, corpus):
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
     half = media.where(F.xxhash64("media_ref") % 2 == 0)
-    via_shuffle = extract(docs, half, ExtractConfig(), media_strategy="frames")
+    via_shuffle = extract(docs, half, ExtractConfig())
     via_blob = extract(
         docs,
         half,
         ExtractConfig(),
-        media_strategy="frames",
         media_side_path=corpus["media_path"],  # blob holds ALL refs
     )
     assert_span_equal(spans_key(via_blob.collect()), spans_key(via_shuffle.collect()))
@@ -136,13 +113,13 @@ def test_mixed_format_media_golden(spark, corpus, tmp_path):
     golden = spans_key(O.run_oracle(corpus["docs"], corpus["media"], ExtractConfig()))
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(mixed_path)
-    result = extract(docs, media, ExtractConfig(), media_strategy="frames")
+    result = extract(docs, media, ExtractConfig())
     assert_span_equal(spans_key(result.collect()), golden)
 
 
 def test_blob_mode_accepts_directory_parquet(spark, corpus, tmp_path):
-    """ADVICE r1 #1: `extract --media <spark-written-dir>` must work in the
-    default frames/blob strategy — build_media_blob expands a directory
+    """ADVICE r1 #1: `extract --media <spark-written-dir>` must work with
+    blob delivery — build_media_blob expands a directory
     parquet to its part files. Output must equal the single-file path."""
     from ai_invoice_ocr_engine_spark.pipeline import build_media_blob, extract
 
@@ -295,7 +272,7 @@ def test_mixed_synf_png_jpeg_bmp_tiff_media_golden(spark, corpus, tmp_path):
     golden = spans_key(O.run_oracle(corpus["docs"], media_rows, ExtractConfig()))
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(mixed_path)
-    result = extract(docs, media, ExtractConfig(), media_strategy="frames")
+    result = extract(docs, media, ExtractConfig())
     assert_span_equal(spans_key(result.collect()), golden)
 
 
@@ -336,7 +313,6 @@ def test_rotated_media_ocr_equals_upright_golden(spark, corpus, tmp_path):
         spark.read.parquet(corpus["docs_path"]),
         spark.read.parquet(rot_path),
         ExtractConfig(),
-        media_strategy="frames",
     )
     assert_span_equal(spans_key(result.collect()), golden)
 
@@ -356,14 +332,12 @@ def test_blob_mode_rejects_transformed_media_bytes(spark, corpus, tmp_path):
     resized = resize_frames(media, 64, 64)
     with _pytest.raises(ValueError, match="COMPUTES its image column"):
         extract(
-            docs, resized, ExtractConfig(),
-            media_strategy="frames", media_side_path=corpus["media_path"],
+            docs, resized, ExtractConfig(), media_side_path=corpus["media_path"],
         )
     # a pure filter keeps blob mode available (refs gate, bytes from disk)
     filtered = media.where(F.xxhash64("media_ref") % 2 == 0)
     out = extract(
-        docs, filtered, ExtractConfig(),
-        media_strategy="frames", media_side_path=corpus["media_path"],
+        docs, filtered, ExtractConfig(), media_side_path=corpus["media_path"],
     )
     assert out.count() > 0
 
@@ -392,16 +366,16 @@ def test_corrupt_media_policy(spark, corpus, tmp_path):
     media = spark.read.parquet(bad_path)
     with _pytest.raises(Exception, match="media_ref"):  # task fails loudly,
         # naming the offending frame (wrapped by Spark's Python-worker error)
-        extract(docs, media, ExtractConfig(), media_strategy="frames").collect()
+        extract(docs, media, ExtractConfig()).collect()
 
     cfg_skip = dataclasses.replace(ExtractConfig(), on_bad_media="skip")
-    got = spans_key(extract(docs, media, cfg_skip, media_strategy="frames").collect())
+    got = spans_key(extract(docs, media, cfg_skip).collect())
     # golden: same corpus with the corrupt frame simply absent
     absent = [m for m in media_rows if m["media_ref"] != bad_ref]
     want = spans_key(O.run_oracle(corpus["docs"], absent, cfg_skip))
     assert_span_equal(got, want)
-    # per-document plans route through extract_doc's policy branch: same result
-    got_b = spans_key(
-        extract(docs, media, cfg_skip, media_strategy="broadcast").collect()
+    # the oracle's per-document skip branch (extractor.extract_doc) on the
+    # SAME corrupt table agrees with the frame plan
+    assert_span_equal(
+        got, spans_key(O.run_oracle(corpus["docs"], media_rows, cfg_skip))
     )
-    assert_span_equal(got_b, want)

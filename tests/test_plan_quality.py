@@ -94,7 +94,7 @@ def test_extract_plan_single_python_crossing(spark, corpus):
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
     plan = (
-        extract(docs, media, ExtractConfig(), media_strategy="frames")
+        extract(docs, media, ExtractConfig())
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -30,7 +30,7 @@ def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
     media = spark.read.parquet(corpus["media_path"])
     prefix = docs_all.where(F.col("bucket") <= 2)
     part = with_bucket(
-        extract(prefix, media, cfg, media_strategy="broadcast"), NB
+        extract(prefix, media, cfg), NB
     )
     part.write.mode("append").partitionBy("bucket").parquet(os.path.join(out, "spans"))
     lineage_of(part, "run-partial").write.mode("append").partitionBy(
@@ -47,7 +47,6 @@ def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
         cfg=cfg,
         num_buckets=NB,
         resume=True,
-        media_strategy="broadcast",
         run_id="run-resume",
     )
     assert stats["buckets_skipped"] == 3
@@ -56,7 +55,7 @@ def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
     # --- final table equals an uninterrupted run ---
     final = spans_key(spark.read.parquet(os.path.join(out, "spans")).collect())
     full = spans_key(
-        extract(docs_all, media, cfg, media_strategy="broadcast").collect()
+        extract(docs_all, media, cfg).collect()
     )
     assert_span_equal(final, full)
 
@@ -71,12 +70,12 @@ def test_rerun_is_noop(spark, corpus, tmp_path):
     out = str(tmp_path / "out2")
     s1 = run_extract(
         spark, corpus["docs_path"], corpus["media_path"], out,
-        num_buckets=NB, media_strategy="broadcast", run_id="r1",
+        num_buckets=NB, run_id="r1",
     )
     assert s1["buckets_skipped"] == 0 and s1["docs"] > 0
     s2 = run_extract(
         spark, corpus["docs_path"], corpus["media_path"], out,
-        num_buckets=NB, media_strategy="broadcast", run_id="r2",
+        num_buckets=NB, run_id="r2",
     )
     assert s2["docs"] == 0  # everything already completed
 
@@ -99,8 +98,7 @@ def test_crash_between_data_and_lineage_no_duplicates(spark, corpus, tmp_path):
 
     # simulate the crash: bucket 3's spans land on disk, its lineage does NOT
     orphan = with_bucket(
-        extract(docs_all.where(F.col("bucket") == 3), media, cfg,
-                media_strategy="broadcast"),
+        extract(docs_all.where(F.col("bucket") == 3), media, cfg),
         NB,
     )
     orphan.write.mode("append").partitionBy("bucket").parquet(
@@ -108,8 +106,7 @@ def test_crash_between_data_and_lineage_no_duplicates(spark, corpus, tmp_path):
     )
     # buckets 0-2 completed properly (data + lineage)
     done = with_bucket(
-        extract(docs_all.where(F.col("bucket") <= 2), media, cfg,
-                media_strategy="broadcast"),
+        extract(docs_all.where(F.col("bucket") <= 2), media, cfg),
         NB,
     )
     done.write.mode("append").partitionBy("bucket").parquet(

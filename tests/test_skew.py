@@ -1,7 +1,7 @@
 """Skew-tier construction and treatment: media-heavy documents concentrate
 into bucket partitions {0,1} by fixture design (FIXTURES.md §1), and the
-engine's cost model is immune to it under the frames strategy (OCR work is
-keyed by media_ref, not doc_id)."""
+engine's cost model is immune to it (OCR work is keyed by media_ref, not
+doc_id)."""
 
 from pyspark.sql import functions as F
 

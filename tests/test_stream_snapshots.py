@@ -36,7 +36,6 @@ def _want(spark, docs_df, media_path):
             docs_df,
             spark.read.parquet(media_path),
             ExtractConfig(),
-            media_strategy="broadcast",
         ).collect()
     )
 

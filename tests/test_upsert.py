@@ -32,7 +32,6 @@ def _base_run(spark, corpus, tmp_path):
         out,
         cfg=ExtractConfig(),
         num_buckets=NB,
-        media_strategy="broadcast",
         run_id="base",
     )
     return out
@@ -61,7 +60,6 @@ def test_upsert_reextracts_subset_and_matches_full_run(spark, corpus, tmp_path):
         media_path=corpus["media_path"],
         where=f"doc_id IN ({ids_sql})",
         cfg=cfg2,
-        media_strategy="broadcast",
     )
     assert rep["docs"] == 6 and not rep["deleted"]
 
@@ -74,7 +72,6 @@ def test_upsert_reextracts_subset_and_matches_full_run(spark, corpus, tmp_path):
             docs.where(F.col("doc_id").isin(ids)),
             media,
             cfg2,
-            media_strategy="broadcast",
         ).collect()
     )
     assert_span_equal({k: after[k] for k in ids}, want)
@@ -95,7 +92,7 @@ def test_upsert_inserts_new_docs(spark, corpus, tmp_path):
     docs_all.where(~F.col("doc_id").isin(held_out)).write.parquet(subset_path)
     run_extract(
         spark, subset_path, corpus["media_path"], out,
-        cfg=ExtractConfig(), num_buckets=NB, media_strategy="broadcast",
+        cfg=ExtractConfig(), num_buckets=NB,
     )
     rep = upsert_extract(
         spark,
@@ -103,7 +100,6 @@ def test_upsert_inserts_new_docs(spark, corpus, tmp_path):
         corpus["docs_path"],
         media_path=corpus["media_path"],
         where=f"doc_id IN ({held_sql})",
-        media_strategy="broadcast",
     )
     assert rep["docs"] == 4
     table = spans_key(
@@ -150,7 +146,6 @@ def test_upsert_is_idempotent(spark, corpus, tmp_path):
     kw = dict(
         media_path=corpus["media_path"],
         where=f"doc_id IN ({ids_sql})",
-        media_strategy="broadcast",
     )
     upsert_extract(spark, out, corpus["docs_path"], **kw)
     first = spans_key(spark.read.parquet(spans_dir).collect())
