@@ -25,20 +25,24 @@ from __future__ import annotations
 
 import struct
 
-#: IFD0 tags considered safe to keep (JEITA CP-3451 names)
+#: IFD0 tags considered safe to keep (JEITA CP-3451 names) and the TIFF
+#: types each may be stored as (2 ASCII, 3 SHORT, 4 LONG, 5 RATIONAL); a
+#: safe tag stored as any other type is dropped like a missing one
 SAFE_IFD0 = {
-    0x0112: "orientation",      # SHORT
-    0x011A: "x_resolution",     # RATIONAL
-    0x011B: "y_resolution",     # RATIONAL
-    0x0128: "resolution_unit",  # SHORT
-    0x0132: "datetime",         # ASCII
+    0x0112: ("orientation", (3,)),
+    0x011A: ("x_resolution", (5,)),
+    0x011B: ("y_resolution", (5,)),
+    0x0128: ("resolution_unit", (3,)),
+    0x0132: ("datetime", (2,)),
 }
 #: Exif-IFD tags considered safe to keep
 SAFE_EXIF = {
-    0x9003: "datetime_original",   # ASCII
-    0xA002: "pixel_x_dimension",   # SHORT/LONG
-    0xA003: "pixel_y_dimension",   # SHORT/LONG
+    0x9003: ("datetime_original", (2,)),
+    0xA002: ("pixel_x_dimension", (3, 4)),
+    0xA003: ("pixel_y_dimension", (3, 4)),
 }
+#: scrub_exif re-packs a RATIONAL as (round(v * _RAT_DEN), _RAT_DEN)
+_RAT_DEN = 10000
 TAG_EXIF_IFD = 0x8769
 TAG_GPS_IFD = 0x8825
 #: GPS IFD tags we can report (read-only; never re-emitted)
@@ -135,6 +139,23 @@ def _scalar(fmt: str, typ: int, cnt: int, val: bytes):
         n, d = struct.unpack_from(fmt + "II", val)
         return n / d if d else None
     return None
+
+
+def _safe_tags(fmt: str, ifd: dict, safe: dict) -> dict:
+    """{name: value} for the safe tags in ``ifd``. A tag stored as a type
+    it does not take, or whose value would overflow scrub_exif's re-pack,
+    is dropped like a missing one — so every value parse_exif reports is
+    one the census schema and the scrub accept."""
+    out = {}
+    for tag, (name, types) in safe.items():
+        typ, cnt, val = ifd.get(tag, (None, 0, b""))
+        if typ not in types:
+            continue
+        v = _scalar(fmt, typ, cnt, val)
+        if v is None or (typ == 5 and round(v * _RAT_DEN) > 0xFFFFFFFF):
+            continue
+        out[name] = v
+    return out
 
 
 def _gps_deg(fmt: str, val: bytes) -> float | None:
@@ -286,17 +307,13 @@ def _parse_tiff(data: bytes, t: int, seg_end: int) -> dict:
     (ifd0_off,) = struct.unpack_from(fmt + "I", data, t + 4)
     ifd0, _ = _read_ifd(data, t, ifd0_off, fmt, seg_end)
     out: dict = {"has_exif": True, "endian": endian.decode()}
-    for tag, name in SAFE_IFD0.items():
-        if tag in ifd0:
-            out[name] = _scalar(fmt, *ifd0[tag])
+    out.update(_safe_tags(fmt, ifd0, SAFE_IFD0))
     exif_ifd = {}
     if TAG_EXIF_IFD in ifd0:
         off = _scalar(fmt, *ifd0[TAG_EXIF_IFD])
         if isinstance(off, int):
             exif_ifd, _ = _read_ifd(data, t, off, fmt, seg_end)
-    for tag, name in SAFE_EXIF.items():
-        if tag in exif_ifd:
-            out[name] = _scalar(fmt, *exif_ifd[tag])
+    out.update(_safe_tags(fmt, exif_ifd, SAFE_EXIF))
     out["has_gps"] = TAG_GPS_IFD in ifd0
     if out["has_gps"]:
         off = _scalar(fmt, *ifd0[TAG_GPS_IFD])
@@ -426,9 +443,9 @@ def scrub_exif(data: bytes) -> bytes:
         if typ == 3:
             entries.append((tag, 3, 1, struct.pack("<H", int(v))))
         elif typ == 5:
-            # re-rationalize at 1/10000 precision (resolutions are small)
+            # re-rationalize at 1/_RAT_DEN precision (resolutions are small)
             entries.append(
-                (tag, 5, 1, struct.pack("<II", int(round(v * 10000)), 10000))
+                (tag, 5, 1, struct.pack("<II", round(v * _RAT_DEN), _RAT_DEN))
             )
         else:
             b = v.encode("ascii", "replace") + b"\x00"

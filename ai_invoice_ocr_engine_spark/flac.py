@@ -14,8 +14,8 @@ Three independent integrity checks run on decode: header CRC-8, frame
 CRC-16, and the STREAMINFO MD5 of the unencoded samples — so a mirrored
 encoder/decoder bug cannot silently pass (the MD5 is computed over raw
 little-endian sample bytes by stdlib hashlib, not by this module's
-bit-level code). Lossy codecs (mp3/aac) remain loud seams in
-functions/multimodal.decode_audio.
+bit-level code). No product surface imports this module; it stays,
+with ogg.py, until its deletion (see tests/test_surface_reach.py).
 """
 
 from __future__ import annotations
@@ -341,9 +341,8 @@ def decode_flac(data: bytes) -> tuple[np.ndarray, int, int]:
 
 def to_mono_int16(s: np.ndarray, bps: int) -> np.ndarray:
     """(n, ch) int32 decoded samples → int16 mono: channel mean, then the
-    declared-depth shift to 16 bits. The ONE downmix shared by native
-    FLAC (functions/multimodal.decode_audio) and Ogg-FLAC (ogg.decode_ogg)
-    so a rounding/clamping change can never make the two diverge."""
+    declared-depth shift to 16 bits. The downmix Ogg-FLAC
+    (ogg.decode_ogg) applies to the native FLAC decode."""
     mono = (s.mean(axis=1) if s.shape[1] > 1 else s[:, 0]).astype(np.int64)
     if bps > 16:
         mono >>= bps - 16  # reduce to int16 by declared depth

@@ -1,13 +1,12 @@
-"""Multimodal column plumbing: images/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched mapInPandas.
+"""Image column plumbing: frames as opaque binary columns with typed
+metadata, processed via Arrow-batched mapInPandas.
 
-The Spark-side plumbing (schemas, batch shape, partitioning, UDF signatures)
-is real and tested. Codecs: images route through kernels.decode_image
-(SYNF/PNG/JPEG/BMP/TIFF — all real, pure numpy); audio supports SYNA and
-real PCM WAV (decode_wav); video supports the deterministic SYNV container.
-Only genuinely-compressed media (mp3/aac, mp4/h264) remain
-NotImplementedError seams — exactly where ffmpeg would slot in on a
-production cluster.
+Frames decode through kernels.decode_image (SYNF/PNG/JPEG/BMP/TIFF/GIF/PNM,
+pure numpy). The column functions here are the image-side curation passes:
+metadata + features (media_metadata), resize (resize_frames), the EXIF
+census and GPS scrub (exif_meta, scrub_gps) and perceptual-hash near-dup
+(phash_frames, phash_near_dup_pairs). Each is one Arrow crossing, no
+shuffle.
 """
 
 from __future__ import annotations
@@ -19,7 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     LongType,
@@ -28,7 +26,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .. import audio as _audio
 from .. import kernels as K
 
 MEDIA_META_SCHEMA = StructType(
@@ -46,11 +43,8 @@ _N_FEATURES = 16
 
 
 def decode_frame(data: bytes) -> np.ndarray:
-    """Decode a binary media payload to a grayscale uint8 frame.
-
-    SYNF and PNG decode natively (pure numpy + stdlib zlib,
-    kernels.decode_png); JPEG remains the codec seam where libjpeg would
-    slot in on a production cluster."""
+    """Decode a binary media payload to a grayscale uint8 frame via the
+    polymorphic reader (kernels.decode_image)."""
     return K.decode_image(data)
 
 
@@ -115,847 +109,6 @@ def resize_frames(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
 
     return media.select("media_ref", "image").mapInPandas(fn, schema)
 
-
-# --------------------------------------------------------------------------
-# Video: frame containers + frame sampling.
-# A "video" is an opaque binary column in the deterministic SYNV container
-# (magic + frame count + length-prefixed SYNF frames) — the decode seam
-# where ffmpeg would slot in on a production cluster. The Spark plumbing
-# (one Arrow crossing, row-expanding mapInPandas, no shuffle) is real.
-# --------------------------------------------------------------------------
-
-import struct as _struct
-
-SYNV_MAGIC = b"SYNV"
-
-VIDEO_FRAME_SCHEMA = StructType(
-    [
-        StructField("media_ref", StringType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("image", BinaryType()),
-    ]
-)
-
-
-def encode_synv(frames: list[bytes]) -> bytes:
-    """Pack SYNF frame payloads into a SYNV container."""
-    out = [SYNV_MAGIC, _struct.pack("<I", len(frames))]
-    for f in frames:
-        out.append(_struct.pack("<I", len(f)))
-        out.append(f)
-    return b"".join(out)
-
-
-def decode_synv(data: bytes) -> list[bytes]:
-    if data[:4] != SYNV_MAGIC:
-        if data[:4] == b"\x00\x00\x00\x18" or data[4:8] == b"ftyp":
-            raise NotImplementedError(
-                "mp4 decode requires ffmpeg, not present in this container; "
-                "SYNV is the supported deterministic format"
-            )
-        raise ValueError("unknown video format")
-    if len(data) < 8:
-        raise ValueError("truncated SYNV container")
-    (n,) = _struct.unpack_from("<I", data, 4)
-    frames, off = [], 8
-    for _ in range(n):
-        if off + 4 > len(data):
-            raise ValueError("truncated SYNV container")
-        (ln,) = _struct.unpack_from("<I", data, off)
-        off += 4
-        if off + ln > len(data):
-            raise ValueError("SYNV frame length exceeds container")
-        frames.append(data[off : off + ln])
-        off += ln
-    return frames
-
-
-def video_frame_payloads(data: bytes) -> list[bytes]:
-    """Polymorphic animation/video → list of frame payloads decodable by
-    kernels.decode_image. SYNV yields its stored SYNF payloads verbatim;
-    animated GIF composites each frame (disposal/transparency honored)
-    and re-packs it as SYNF so downstream frame consumers stay
-    format-agnostic; mp4 demuxes for real (box tree + stsc/stsz/stco
-    sample map, mp4.py) with raw-SYNF and Photo-JPEG sample entries
-    decoding end-to-end; AVI demuxes for real (avi.py) with MJPG and
-    BI_RGB DIB frames decoding end-to-end — only inter-frame bitstreams
-    (avc1/aac, cvid/XVID, ...) remain the ffmpeg codec seam
-    (NotImplementedError naming the codec)."""
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        from ..gif import gif_frames
-
-        return [K.encode_synf(f) for f in gif_frames(data)]
-    if data[4:8] == b"ftyp":
-        from ..mp4 import mp4_frame_payloads
-
-        return mp4_frame_payloads(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        from ..avi import avi_frame_payloads
-
-        return avi_frame_payloads(data)
-    if data[:8] == K.PNG_MAGIC:
-        from ..apng import apng_frames
-
-        return [K.encode_synf(f) for f in apng_frames(data)]
-    return decode_synv(data)
-
-
-def sample_video_frames(videos: DataFrame, every_n: int = 2) -> DataFrame:
-    """videos(media_ref, video binary) → one row per sampled frame
-    (media_ref, frame_idx, image) — frame sampling for a multimodal
-    training pipeline, every_n-th frame starting at 0. Row-expanding
-    mapInPandas: a narrow stage, output partitioning inherits the scan."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, idxs, imgs = [], [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["video"]):
-                for i, frame in enumerate(video_frame_payloads(bytes(blob))):
-                    if i % every_n == 0:
-                        refs.append(ref)
-                        idxs.append(i)
-                        imgs.append(frame)
-            yield pd.DataFrame({"media_ref": refs, "frame_idx": idxs, "image": imgs})
-
-    return videos.select("media_ref", "video").mapInPandas(fn, VIDEO_FRAME_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Audio: deterministic SYNA container (magic + sample count + int16 PCM) and
-# windowed features — the librosa/ffmpeg seam with real Spark plumbing.
-# --------------------------------------------------------------------------
-
-SYNA_MAGIC = b"SYNA"
-
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_ref", StringType()),
-        StructField("n_samples", IntegerType()),
-        StructField("rms", ArrayType(FloatType())),
-        StructField("zero_crossings", IntegerType()),
-    ]
-)
-
-
-def encode_syna(samples: np.ndarray) -> bytes:
-    s = np.asarray(samples, np.int16)
-    return SYNA_MAGIC + _struct.pack("<I", len(s)) + s.tobytes()
-
-
-def decode_syna(data: bytes) -> np.ndarray:
-    if data[:4] != SYNA_MAGIC:
-        raise ValueError("not a SYNA blob")
-    (n,) = _struct.unpack_from("<I", data, 4)
-    return np.frombuffer(data, np.int16, count=n, offset=8)
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """Canonical 16-bit PCM mono RIFF/WAVE writer (fixture side)."""
-    s = np.asarray(samples, "<i2")
-    data = s.tobytes()
-    fmt = _struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    body = b"WAVE" + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + _struct.pack("<I", len(data)) + data
-    return b"RIFF" + _struct.pack("<I", len(body)) + body
-
-
-def encode_wav_ext(
-    samples: np.ndarray,
-    codec: str = "pcm16",
-    sample_rate: int = 16000,
-    extensible: bool = False,
-) -> bytes:
-    """Fixture-side WAV writer covering every decode_wav codec path.
-
-    codec: pcm16 | pcm24 | pcm32 | float32 | float64 | alaw | ulaw | adpcm.
-    ``samples`` is int16 (n,) mono or (n, ch); multi-channel is written
-    interleaved. ``extensible=True`` wraps the fmt in WAVE_FORMAT_EXTENSIBLE
-    with the standard SubFormat GUID (decode_wav must unwrap it)."""
-    s = np.asarray(samples, np.int16)
-    if s.ndim == 1:
-        s = s[:, None]
-    n_frames, n_ch = s.shape
-    inter = s.reshape(-1)  # row-major == frame-interleaved
-    fact = None
-    if codec == "pcm16":
-        tag, bits, data = 1, 16, inter.astype("<i2").tobytes()
-        block = 2 * n_ch
-    elif codec == "pcm24":
-        v = inter.astype(np.int32) << 8
-        b = np.zeros((len(v), 3), np.uint8)
-        b[:, 0] = v & 0xFF
-        b[:, 1] = (v >> 8) & 0xFF
-        b[:, 2] = (v >> 16) & 0xFF
-        tag, bits, data, block = 1, 24, b.tobytes(), 3 * n_ch
-    elif codec == "pcm32":
-        tag, bits, block = 1, 32, 4 * n_ch
-        data = (inter.astype(np.int32) << 16).astype("<i4").tobytes()
-    elif codec in ("float32", "float64"):
-        bits = 32 if codec == "float32" else 64
-        f = inter.astype(np.float64) / 32767.0
-        data = f.astype("<f4" if bits == 32 else "<f8").tobytes()
-        tag, block = 3, bits // 8 * n_ch
-    elif codec == "alaw":
-        tag, bits, block = 6, 8, n_ch
-        data = _audio.alaw_encode(inter).tobytes()
-    elif codec == "ulaw":
-        tag, bits, block = 7, 8, n_ch
-        data = _audio.ulaw_encode(inter).tobytes()
-    elif codec == "adpcm":
-        spb = min(505, (max(n_frames - 1, 8) + 7) // 8 * 8 + 1)
-        data, block, spb = _audio.ima_adpcm_encode(s, spb)
-        tag, bits, fact = 0x11, 4, n_frames
-    else:
-        raise ValueError(f"unknown fixture codec {codec!r}")
-    byte_rate = sample_rate * block
-    if extensible:
-        fmt = _struct.pack(
-            "<HHIIHHHHI",
-            0xFFFE, n_ch, sample_rate, byte_rate, block, bits, 22, bits,
-            (1 << n_ch) - 1,
-        ) + _struct.pack("<H", tag) + _WAVEEXT_GUID_TAIL
-    elif codec == "adpcm":
-        spb_field = (block - 4 * n_ch) * 2 // n_ch + 1
-        fmt = _struct.pack(
-            "<HHIIHHHH", tag, n_ch, sample_rate, byte_rate, block, bits, 2,
-            spb_field,
-        )
-    else:
-        fmt = _struct.pack("<HHIIHH", tag, n_ch, sample_rate, byte_rate, block, bits)
-    body = b"WAVE" + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-    if fact is not None:
-        body += b"fact" + _struct.pack("<II", 4, fact)
-    body += b"data" + _struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        body += b"\x00"
-    return b"RIFF" + _struct.pack("<I", len(body)) + body
-
-
-#: KSDATAFORMAT_SUBTYPE GUID tail shared by the PCM/float/A-law/mu-law/ADPCM
-#: subformats of WAVE_FORMAT_EXTENSIBLE — the leading uint16 is the classic
-#: format tag (Microsoft multimedia registration, public spec)
-_WAVEEXT_GUID_TAIL = bytes.fromhex("000000001000800000aa00389b71")
-
-
-def decode_wav(data: bytes) -> np.ndarray:
-    """RIFF/WAVE → int16 mono samples (multi-channel averaged).
-
-    Supported format tags: 1 (PCM at 8/16/24/32 bit), 3 (IEEE float 32/64),
-    6 (G.711 A-law), 7 (G.711 mu-law), 0x11 (IMA/DVI ADPCM), and 0xFFFE
-    (WAVE_FORMAT_EXTENSIBLE routed by its SubFormat GUID to any of the
-    above). Genuinely-compressed codecs (mp3-in-WAV 0x55, MS ADPCM 2, …)
-    raise NotImplementedError; malformed RIFF raises ValueError."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    pos = 12
-    fmt = None
-    pcm = None
-    fact_samples = None
-    try:
-        while pos + 8 <= len(data):
-            cid = data[pos : pos + 4]
-            (size,) = _struct.unpack_from("<I", data, pos + 4)
-            body = data[pos + 8 : pos + 8 + size]
-            if cid == b"fmt ":
-                audio_fmt, n_ch, _rate, _br, block_align, bits = (
-                    _struct.unpack_from("<HHIIHH", body)
-                )
-                if audio_fmt == 0xFFFE:
-                    # extensible: cbSize(2) validBits(2) chanMask(4) GUID(16)
-                    if len(body) < 40:
-                        raise ValueError("truncated WAVE_FORMAT_EXTENSIBLE")
-                    if body[26:40] != _WAVEEXT_GUID_TAIL:
-                        raise NotImplementedError(
-                            "non-standard WAVE_FORMAT_EXTENSIBLE SubFormat"
-                        )
-                    (audio_fmt,) = _struct.unpack_from("<H", body, 24)
-                fmt = (audio_fmt, n_ch, bits, block_align)
-            elif cid == b"data":
-                pcm = body
-            elif cid == b"fact" and size >= 4:
-                (fact_samples,) = _struct.unpack_from("<I", body)
-            pos += 8 + size + (size & 1)  # chunks are word-aligned
-        if fmt is None or pcm is None:
-            raise ValueError("WAV missing fmt/data chunk")
-    except _struct.error as e:
-        raise ValueError(f"corrupt WAV: {e}") from e
-    audio_fmt, n_ch, bits, block_align = fmt
-    if n_ch < 1:
-        raise ValueError("WAV with zero channels")
-    if audio_fmt == 1:
-        if bits == 8:
-            s = (np.frombuffer(pcm, np.uint8).astype(np.int32) - 128) << 8
-        elif bits == 16:
-            s = np.frombuffer(pcm[: len(pcm) // 2 * 2], "<i2").astype(np.int32)
-        elif bits == 24:
-            s = _audio.pcm24_to_int16(pcm).astype(np.int32)
-        elif bits == 32:
-            raw = np.frombuffer(pcm[: len(pcm) // 4 * 4], "<i4")
-            s = (raw >> 16).astype(np.int32)
-        else:
-            raise NotImplementedError(f"{bits}-bit PCM WAV unsupported")
-    elif audio_fmt == 3:
-        if bits not in (32, 64):
-            raise NotImplementedError(f"{bits}-bit float WAV unsupported")
-        s = _audio.float_to_int16(pcm, bits).astype(np.int32)
-    elif audio_fmt == 6:
-        s = _audio.alaw_decode(np.frombuffer(pcm, np.uint8)).astype(np.int32)
-    elif audio_fmt == 7:
-        s = _audio.ulaw_decode(np.frombuffer(pcm, np.uint8)).astype(np.int32)
-    elif audio_fmt == 0x11:
-        frames = _audio.ima_adpcm_decode(pcm, n_ch, block_align)
-        if fact_samples is not None:
-            frames = frames[:fact_samples]  # drop final-block pad nibbles
-        return frames.mean(axis=1).astype(np.int16) if n_ch > 1 else frames[
-            :, 0
-        ].astype(np.int16)
-    else:
-        raise NotImplementedError(
-            f"WAV format {audio_fmt} (compressed codec) unsupported"
-        )
-    return _mix_mono(s, n_ch)
-
-
-def _mix_mono(s: np.ndarray, n_ch: int) -> np.ndarray:
-    """Channel-average to int16 mono, decode_wav's exact convention."""
-    s = s.astype(np.int32)
-    if n_ch > 1:
-        s = s[: len(s) // n_ch * n_ch].reshape(-1, n_ch).mean(axis=1).astype(np.int32)
-    return s.astype(np.int16)
-
-
-#: AU encoding id -> (codec name, container bytes; 0 = float path)
-_AU_ENCODINGS = {
-    1: ("ulaw", 1), 2: ("pcm8", 1), 3: ("pcm16", 2), 4: ("pcm24", 3),
-    5: ("pcm32", 4), 6: ("float32", 4), 7: ("float64", 8), 27: ("alaw", 1),
-}
-
-
-def decode_au(data: bytes) -> np.ndarray:
-    """Sun/NeXT AU (.au/.snd) → int16 mono samples.
-
-    Header (all big-endian u32): magic '.snd', data offset, data size
-    (0xFFFFFFFF = unknown), encoding, sample rate, channels. Supported
-    encodings: 1 mu-law, 2/3/4/5 linear PCM 8/16/24/32 (signed BE),
-    6/7 IEEE float 32/64, 27 A-law; anything else (ADPCM families, DSP
-    words) raises NotImplementedError."""
-    if data[:4] != b".snd":
-        raise ValueError("not an AU file")
-    if len(data) < 24:
-        raise ValueError("AU header truncated")
-    off, size, enc, _rate, n_ch = _struct.unpack_from(">5I", data, 4)
-    if off < 24 or off > len(data):
-        raise ValueError("AU bad data offset")
-    if n_ch < 1:
-        raise ValueError("AU zero channels")
-    pcm = data[off : off + size] if size != 0xFFFFFFFF else data[off:]
-    if enc not in _AU_ENCODINGS:
-        raise NotImplementedError(f"AU encoding {enc} unsupported")
-    if enc == 1:
-        s = _audio.ulaw_decode(np.frombuffer(pcm, np.uint8))
-    elif enc == 27:
-        s = _audio.alaw_decode(np.frombuffer(pcm, np.uint8))
-    elif enc == 6:
-        s = _audio.float_to_int16(pcm, 32, big_endian=True)
-    elif enc == 7:
-        s = _audio.float_to_int16(pcm, 64, big_endian=True)
-    else:
-        s = _audio.pcm_be_to_int16(pcm, _AU_ENCODINGS[enc][1])
-    return _mix_mono(s, n_ch)
-
-
-def _ext80_to_float(b: bytes) -> float:
-    """80-bit IEEE 754 extended (sign 1, exp 15, explicit-integer-bit
-    mantissa 64) → float — the AIFF COMM sampleRate field."""
-    if len(b) < 10:
-        raise ValueError("AIFF extended float truncated")
-    se = int.from_bytes(b[:2], "big")
-    exp = se & 0x7FFF
-    mant = int.from_bytes(b[2:10], "big")
-    if exp == 0 and mant == 0:
-        return 0.0
-    if exp == 0x7FFF:
-        raise ValueError("AIFF infinite/NaN sample rate")
-    if not 16383 - 128 <= exp <= 16383 + 128:
-        # no physical sample rate lives outside 2^-128..2^128; beyond the
-        # float64 range the multiply below would raise OverflowError
-        raise ValueError("AIFF implausible sample-rate exponent")
-    sign = -1.0 if se & 0x8000 else 1.0
-    return sign * mant * 2.0 ** (exp - 16383 - 63)
-
-
-def _float_to_ext80(x: float) -> bytes:
-    """float → 80-bit IEEE extended, exact for every practical rate."""
-    import math
-
-    if x == 0.0:
-        return b"\x00" * 10
-    sign = 0x8000 if x < 0 else 0
-    m, e = math.frexp(abs(x))  # abs(x) = m * 2^e, m in [0.5, 1)
-    mant = int(m * (1 << 64))
-    return _struct.pack(">H", sign | (e - 1 + 16383)) + mant.to_bytes(8, "big")
-
-
-def _parse_aiff_chunks(data: bytes):
-    """FORM walk shared by decode_aiff and audio_metadata: returns
-    (is_aifc, n_ch, n_frames, bits, rate, comp, ssnd_body_or_None)."""
-    if data[:4] != b"FORM" or data[8:12] not in (b"AIFF", b"AIFC"):
-        raise ValueError("not an AIFF/AIFC file")
-    is_aifc = data[8:12] == b"AIFC"
-    comm = ssnd = None
-    for cid, body in _iff_chunks(data):
-        if cid == b"COMM":
-            comm = body
-        elif cid == b"SSND":
-            ssnd = body
-    if comm is None or len(comm) < 18:
-        raise ValueError("AIFF missing/short COMM chunk")
-    n_ch, n_frames, bits = _struct.unpack_from(">HIH", comm)
-    rate = _ext80_to_float(comm[8:18])
-    comp = b"NONE"
-    if is_aifc:
-        if len(comm) < 22:
-            raise ValueError("AIFC COMM missing compression type")
-        comp = comm[18:22]
-    return is_aifc, n_ch, n_frames, bits, rate, comp, ssnd
-
-
-#: AIFC compression fourcc (upper-cased) -> codec name
-_AIFC_CODECS = {
-    b"NONE": "pcm", b"TWOS": "pcm", b"IN24": "pcm", b"IN32": "pcm",
-    b"SOWT": "pcm_le", b"ULAW": "ulaw", b"ALAW": "alaw",
-    b"FL32": "float32", b"FL64": "float64",
-}
-
-
-def decode_aiff(data: bytes) -> np.ndarray:
-    """AIFF / AIFF-C → int16 mono samples.
-
-    COMM carries channels / frame count / bit depth / 80-bit-extended
-    sample rate (+ compression fourcc for AIFC); SSND carries the frames
-    after an offset/blockSize prefix. Supported: big-endian PCM at any
-    declared depth ≤32 ('NONE'/'twos'/'in24'/'in32' — left-justified in
-    ceil(bits/8)-byte containers per AIFF-1.3), byte-swapped 'sowt'
-    PCM16, G.711 'ulaw'/'alaw', IEEE 'fl32'/'fl64'. Genuinely-compressed
-    AIFC (IMA4, MACE, GSM) raises NotImplementedError."""
-    _is_aifc, n_ch, n_frames, bits, _rate, comp, ssnd = _parse_aiff_chunks(data)
-    if n_ch < 1:
-        raise ValueError("AIFF zero channels")
-    if ssnd is None or len(ssnd) < 8:
-        raise ValueError("AIFF missing/short SSND chunk")
-    (soff,) = _struct.unpack_from(">I", ssnd)
-    pcm = ssnd[8 + soff :]
-    cu = comp.upper()
-    if cu not in _AIFC_CODECS:
-        raise NotImplementedError(
-            f"AIFC compression {comp!r} (compressed codec) unsupported"
-        )
-    codec = _AIFC_CODECS[cu]
-    if codec == "pcm":
-        if not 1 <= bits <= 32:
-            raise ValueError(f"AIFF sample size {bits} out of range")
-        s = _audio.pcm_be_to_int16(pcm, (bits + 7) // 8)
-    elif codec == "pcm_le":
-        if bits != 16:
-            raise NotImplementedError(f"sowt at {bits} bit unsupported")
-        s = np.frombuffer(pcm[: len(pcm) // 2 * 2], "<i2")
-    elif codec == "ulaw":
-        s = _audio.ulaw_decode(np.frombuffer(pcm, np.uint8))
-    elif codec == "alaw":
-        s = _audio.alaw_decode(np.frombuffer(pcm, np.uint8))
-    else:
-        s = _audio.float_to_int16(pcm, 32 if codec == "float32" else 64,
-                                  big_endian=True)
-    s = s[: n_frames * n_ch]  # SSND may carry block padding
-    return _mix_mono(s, n_ch)
-
-
-#: 8SVX Fibonacci-delta table (the EA IFF 85 / 8SVX.FD spec constant)
-_FIB_DELTAS = np.array(
-    [-34, -21, -13, -8, -5, -3, -2, -1, 0, 1, 2, 3, 5, 8, 13, 21], np.int32
-)
-
-
-def _iff_chunks(data: bytes):
-    """Yield (chunk id, body) for a big-endian EA IFF 85 FORM stream —
-    the walk AIFF/AIFC and 8SVX share. The `pos + 8 <= len` guard makes
-    the size unpack total; truncation shows up as short bodies, which the
-    per-format length checks catch."""
-    pos = 12
-    while pos + 8 <= len(data):
-        (size,) = _struct.unpack_from(">I", data, pos + 4)
-        yield data[pos : pos + 4], data[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-
-
-def _parse_8svx(data: bytes):
-    """IFF walk for FORM/8SVX: returns (n_per_ch, rate, comp, n_ch, body)."""
-    vhdr, body, chan = None, None, 2  # CHAN absent = mono (LEFT)
-    for cid, blk in _iff_chunks(data):
-        if cid == b"VHDR":
-            vhdr = blk
-        elif cid == b"BODY":
-            body = blk
-        elif cid == b"CHAN" and len(blk) >= 4:
-            (chan,) = _struct.unpack_from(">I", blk)
-    if vhdr is None or len(vhdr) < 16 or body is None:
-        raise ValueError("8SVX missing VHDR/BODY chunk")
-    one_shot, repeat = _struct.unpack_from(">II", vhdr)
-    rate, _oct, comp = _struct.unpack_from(">HBB", vhdr, 12)
-    n_ch = 2 if chan == 6 else 1  # 2=LEFT, 4=RIGHT, 6=STEREO
-    return one_shot + repeat, rate, comp, n_ch, body
-
-
-def _fib_delta_decode(body: bytes) -> np.ndarray:
-    """8SVX.FD: byte 0 pad, byte 1 initial value (= sample 0), then 2
-    deltas/byte (high nibble first). Accumulation clamps to int8 PER STEP
-    — matching a clamping encoder exactly; a cumsum-then-clip would drift
-    permanently after the first saturation event. Fast path: when the
-    raw cumsum never leaves int8 range, no clamp ever fired and the
-    vectorized result is exact."""
-    if len(body) < 2:
-        raise ValueError("8SVX Fibonacci body truncated")
-    packed = np.frombuffer(body[2:], np.uint8)
-    nibs = np.empty(2 * len(packed), np.uint8)
-    nibs[0::2] = packed >> 4
-    nibs[1::2] = packed & 0x0F
-    x0 = int(np.frombuffer(body[1:2], np.int8)[0])
-    x = x0 + np.cumsum(_FIB_DELTAS[nibs])
-    if len(x) == 0 or (-128 <= x.min() and x.max() <= 127):
-        return np.concatenate(([x0], x)).astype(np.int8)
-    out = np.empty(1 + len(nibs), np.int8)
-    out[0] = cur = x0
-    for i, d in enumerate(_FIB_DELTAS[nibs].tolist()):
-        cur = max(-128, min(127, cur + d))
-        out[i + 1] = cur
-    return out
-
-
-def decode_8svx(data: bytes) -> np.ndarray:
-    """EA IFF 8SVX (Amiga) → int16 mono samples. Signed 8-bit PCM
-    (sCompression 0) or Fibonacci-delta (1); stereo (CHAN 6) stores the
-    full left block then the right block — each channel independently
-    FD-compressed with its own pad/initial bytes — averaged here. VHDR's
-    oneShot+repeat count trims FD nibble padding per channel."""
-    n_per_ch, rate, comp, n_ch, body = _parse_8svx(data)
-    if comp == 0:
-        chans = [np.frombuffer(body, np.int8)]
-        if n_ch == 2:
-            half = len(body) // 2
-            chans = [np.frombuffer(body[:half], np.int8),
-                     np.frombuffer(body[half : 2 * half], np.int8)]
-    elif comp == 1:
-        if n_ch == 2:
-            half = len(body) // 2
-            chans = [_fib_delta_decode(body[:half]),
-                     _fib_delta_decode(body[half : 2 * half])]
-        else:
-            chans = [_fib_delta_decode(body)]
-    else:
-        raise NotImplementedError(f"8SVX compression {comp} unsupported")
-    if n_per_ch:
-        chans = [c[:n_per_ch] for c in chans]
-    n = min(len(c) for c in chans)
-    s = sum(c[:n].astype(np.int32) << 8 for c in chans)
-    if n_ch == 2:
-        s = (s // 2).astype(np.int32)
-    return s.astype(np.int16)
-
-
-_VOC_MAGIC = b"Creative Voice File\x1a"
-
-
-def _voc_blocks(data: bytes):
-    """Yield (block_type, payload) for a Creative VOC stream."""
-    if data[:20] != _VOC_MAGIC or len(data) < 26:
-        raise ValueError("not a VOC file")
-    (hdr_size,) = _struct.unpack_from("<H", data, 20)
-    ver, chk = _struct.unpack_from("<HH", data, 22)
-    if ((~ver + 0x1234) & 0xFFFF) != chk:
-        raise ValueError("VOC header checksum mismatch")
-    pos = hdr_size
-    while pos < len(data):
-        t = data[pos]
-        if t == 0:  # terminator (no length field)
-            return
-        if pos + 4 > len(data):
-            raise ValueError("VOC block header truncated")
-        ln = int.from_bytes(data[pos + 1 : pos + 4], "little")
-        body = data[pos + 4 : pos + 4 + ln]
-        if len(body) < ln:
-            raise ValueError("VOC block body truncated")
-        yield t, body
-        pos += 4 + ln
-
-
-def _voc_pcm(pcm: bytes, fmt: str, n_ch: int) -> np.ndarray:
-    """One VOC sound payload → int32 mono (channel-averaged) samples."""
-    if fmt == "u8":
-        s = (np.frombuffer(pcm, np.uint8).astype(np.int32) - 128) << 8
-    else:  # s16
-        s = np.frombuffer(pcm[: len(pcm) // 2 * 2], "<i2").astype(np.int32)
-    if n_ch > 1:
-        s = (s[: len(s) // n_ch * n_ch].reshape(-1, n_ch)
-             .mean(axis=1).astype(np.int32))
-    return s
-
-
-def _voc_scan(data: bytes, want_samples: bool):
-    """Shared walk behind decode_voc and audio_metadata: yields
-    (mono_samples_or_None, n_mono, rate, n_ch, bits, codec_name) per sound
-    block, tracking the type-1/2 format-inheritance state and the type-8
-    legacy-extension prefix (which sets stereo + a 16-bit time constant
-    for the NEXT type-1 block)."""
-    last: tuple[str, int] | None = None  # (fmt, n_ch) for type-2 blocks
-    ext: tuple[int, int] | None = None  # (rate, n_ch) from type 8
-    rate = 0
-    for t, body in _voc_blocks(data):
-        if t == 1:
-            if len(body) < 2:
-                raise ValueError("VOC type-1 block truncated")
-            if body[1] != 0:
-                raise NotImplementedError(
-                    f"VOC type-1 codec {body[1]} unsupported")
-            if ext is not None:
-                rate, n_ch = ext  # type 8 overrides the sr byte
-                ext = None
-            else:
-                rate, n_ch = 1_000_000 // (256 - body[0]), 1
-            last = ("u8", n_ch)
-            pcm = body[2:]
-            yield (
-                _voc_pcm(pcm, "u8", n_ch) if want_samples else None,
-                len(pcm) // n_ch, rate, n_ch, 8, "voc_codec_0",
-            )
-        elif t == 2:  # continuation: inherits the previous block's format
-            if last is None:
-                raise ValueError("VOC continuation without a sound block")
-            fmt, n_ch = last
-            w = 1 if fmt == "u8" else 2
-            yield (
-                _voc_pcm(body, fmt, n_ch) if want_samples else None,
-                len(body) // (w * n_ch), rate, n_ch,
-                8 * w, f"voc_codec_{0 if fmt == 'u8' else 4}",
-            )
-        elif t == 3:
-            if len(body) < 3:
-                raise ValueError("VOC silence block truncated")
-            n = int.from_bytes(body[:2], "little") + 1
-            srate = 1_000_000 // (256 - body[2])
-            yield (
-                np.zeros(n, np.int32) if want_samples else None,
-                n, srate, 1, 8, "silence",
-            )
-        elif t == 8:
-            if len(body) < 4:
-                raise ValueError("VOC extension block truncated")
-            tc, pack, mode = _struct.unpack_from("<HBB", body)
-            if pack != 0:
-                raise NotImplementedError(
-                    f"VOC extension codec {pack} unsupported")
-            n_ch = 2 if mode == 1 else 1
-            ext = (256_000_000 // (65536 - tc) // n_ch, n_ch)
-        elif t == 9:
-            if len(body) < 12:
-                raise ValueError("VOC type-9 block truncated")
-            rate, bits, n_ch, codec = _struct.unpack_from("<IBBH", body)
-            if n_ch < 1:
-                raise ValueError("VOC type-9 zero channels")
-            pcm = body[12:]
-            if codec == 0 and bits == 8:
-                fmt = "u8"
-            elif codec == 4 and bits == 16:
-                fmt = "s16"
-            else:
-                raise NotImplementedError(
-                    f"VOC type-9 codec {codec}/{bits}bit unsupported")
-            last = (fmt, n_ch)
-            w = 1 if fmt == "u8" else 2
-            yield (
-                _voc_pcm(pcm, fmt, n_ch) if want_samples else None,
-                len(pcm) // (w * n_ch), int(rate), int(n_ch), int(bits),
-                f"voc_codec_{codec}",
-            )
-        elif t in (6, 7):
-            raise NotImplementedError("VOC repeat loops unsupported")
-        # 4 (marker), 5 (text) carry no samples: skip
-
-
-def decode_voc(data: bytes) -> np.ndarray:
-    """Creative Voice (.voc) → int16 mono samples.
-
-    Sound blocks: type 1 (8-bit unsigned PCM at 1e6/(256-srb) Hz, or the
-    rate/stereo a preceding type-8 extension declares), type 2
-    (continuation, inheriting the previous sound block's format), type 3
-    (silence → exact zeros), type 9 (extended: 8-bit unsigned / 16-bit
-    signed LE PCM, multi-channel averaged). Compressed codecs (4-bit
-    ADPCM families) and repeat loops (types 6/7 — expansion would guess a
-    count) raise NotImplementedError."""
-    segs = [s for s, *_ in _voc_scan(data, want_samples=True)]
-    if not segs:
-        raise ValueError("VOC contains no sound blocks")
-    return np.concatenate(segs).astype(np.int16)
-
-
-def encode_8svx(
-    samples: np.ndarray, sample_rate: int = 16000, fib: bool = False
-) -> bytes:
-    """Fixture 8SVX encoder: int16 1-D mono or (n, 2) stereo → FORM/8SVX
-    (top byte of each sample; Fibonacci-delta when ``fib``, greedy with
-    per-step clamp — stereo FD compresses each channel block separately
-    like the container stores them)."""
-    s = np.asarray(samples, np.int16)
-    stereo = s.ndim == 2
-
-    def fd_channel(ch8: np.ndarray) -> bytes:
-        cur = int(ch8[0])
-        out = bytearray([0, cur & 0xFF])
-        nibs = []
-        for v in ch8[1:].tolist():
-            d = int(np.argmin(np.abs(_FIB_DELTAS - (v - cur))))
-            cur = max(-128, min(127, cur + int(_FIB_DELTAS[d])))
-            nibs.append(d)
-        if len(nibs) & 1:
-            nibs.append(8)  # zero delta pads to a whole byte
-        for i in range(0, len(nibs), 2):
-            out.append((nibs[i] << 4) | nibs[i + 1])
-        return bytes(out)
-
-    s8 = (s.astype(np.int32) >> 8).astype(np.int8)
-    if stereo:
-        body = (
-            fd_channel(s8[:, 0]) + fd_channel(s8[:, 1]) if fib
-            else s8[:, 0].tobytes() + s8[:, 1].tobytes()
-        )
-    elif fib:
-        body = fd_channel(s8)
-    else:
-        body = s8.tobytes()
-    n = len(s)
-    vhdr = _struct.pack(">IIIHBBI", n, 0, 0, sample_rate, 1,
-                        1 if fib else 0, 0x10000)
-    chunks = b"VHDR" + _struct.pack(">I", len(vhdr)) + vhdr
-    if stereo:
-        chunks += b"CHAN" + _struct.pack(">II", 4, 6)
-    chunks += b"BODY" + _struct.pack(">I", len(body)) + body
-    if len(body) & 1:
-        chunks += b"\x00"
-    return b"FORM" + _struct.pack(">I", 4 + len(chunks)) + b"8SVX" + chunks
-
-
-def encode_voc(
-    samples: np.ndarray, sample_rate: int = 16000, extended: bool = True
-) -> bytes:
-    """Fixture VOC encoder: int16 1-D mono or (n, ch) → one type-9 16-bit
-    block (``extended``) or a type-1 8-bit-unsigned block."""
-    s = np.asarray(samples, np.int16)
-    n_ch = 1 if s.ndim == 1 else s.shape[1]
-    inter = s.reshape(-1)
-    ver = 0x010A
-    head = _VOC_MAGIC + _struct.pack("<HHH", 26, ver, (~ver + 0x1234) & 0xFFFF)
-    if extended:
-        pcm = inter.astype("<i2").tobytes()
-        body = _struct.pack("<IBBHI", sample_rate, 16, n_ch, 4, 0) + pcm
-        blk = b"\x09" + len(body).to_bytes(3, "little") + body
-    else:
-        srb = 256 - 1_000_000 // sample_rate
-        pcm = ((inter.astype(np.int32) >> 8) + 128).astype(np.uint8).tobytes()
-        body = bytes([srb, 0]) + pcm
-        blk = b"\x01" + len(body).to_bytes(3, "little") + body
-    return head + blk + b"\x00"
-
-
-def encode_au(
-    samples: np.ndarray, sample_rate: int = 16000, encoding: int = 3
-) -> bytes:
-    """Fixture AU encoder. ``samples``: int16, 1-D mono or (n, ch)."""
-    s = np.asarray(samples, np.int16)
-    n_ch = 1 if s.ndim == 1 else s.shape[1]
-    inter = s.reshape(-1)
-    if encoding == 1:
-        pcm = _audio.ulaw_encode(inter).tobytes()
-    elif encoding == 27:
-        pcm = _audio.alaw_encode(inter).tobytes()
-    elif encoding == 2:
-        pcm = (inter.astype(np.int16) >> 8).astype(np.int8).tobytes()
-    elif encoding == 3:
-        pcm = inter.astype(">i2").tobytes()
-    elif encoding == 4:
-        v = inter.astype(np.int32) << 8
-        b = np.empty((len(v), 3), np.uint8)
-        b[:, 0] = (v >> 16) & 0xFF
-        b[:, 1] = (v >> 8) & 0xFF
-        b[:, 2] = v & 0xFF
-        pcm = b.tobytes()
-    elif encoding == 5:
-        pcm = (inter.astype(np.int32) << 16).astype(">i4").tobytes()
-    elif encoding == 6:
-        pcm = (inter.astype(np.float64) / 32767.0).astype(">f4").tobytes()
-    else:
-        raise ValueError(f"fixture encoder: AU encoding {encoding}")
-    return (
-        b".snd"
-        + _struct.pack(">5I", 24, len(pcm), encoding, sample_rate, n_ch)
-        + pcm
-    )
-
-
-def encode_aiff(
-    samples: np.ndarray,
-    sample_rate: int = 16000,
-    comp: bytes = b"NONE",
-    bits: int = 16,
-) -> bytes:
-    """Fixture AIFF/AIFF-C encoder (AIFC iff ``comp`` != b'NONE').
-    ``samples``: int16, 1-D mono or (n, ch)."""
-    s = np.asarray(samples, np.int16)
-    n_ch = 1 if s.ndim == 1 else s.shape[1]
-    n_frames = len(s) if s.ndim == 1 else s.shape[0]
-    inter = s.reshape(-1)
-    if comp == b"NONE":
-        if bits == 16:
-            pcm = inter.astype(">i2").tobytes()
-        elif bits == 8:
-            pcm = (inter.astype(np.int16) >> 8).astype(np.int8).tobytes()
-        elif bits == 24:
-            v = inter.astype(np.int32) << 8
-            b = np.empty((len(v), 3), np.uint8)
-            b[:, 0] = (v >> 16) & 0xFF
-            b[:, 1] = (v >> 8) & 0xFF
-            b[:, 2] = v & 0xFF
-            pcm = b.tobytes()
-        elif bits == 32:
-            pcm = (inter.astype(np.int32) << 16).astype(">i4").tobytes()
-        else:
-            raise ValueError(f"fixture encoder: AIFF bits {bits}")
-    elif comp == b"sowt":
-        bits = 16
-        pcm = inter.astype("<i2").tobytes()
-    elif comp == b"ulaw":
-        bits = 16  # COMM declares the UNCOMPRESSED size for G.711
-        pcm = _audio.ulaw_encode(inter).tobytes()
-    elif comp == b"alaw":
-        bits = 16
-        pcm = _audio.alaw_encode(inter).tobytes()
-    elif comp == b"fl32":
-        bits = 32
-        pcm = (inter.astype(np.float64) / 32767.0).astype(">f4").tobytes()
-    else:
-        raise ValueError(f"fixture encoder: AIFC comp {comp!r}")
-    is_aifc = comp != b"NONE"
-    comm = _struct.pack(">HIH", n_ch, n_frames, bits) + _float_to_ext80(
-        float(sample_rate)
-    )
-    if is_aifc:
-        comm += comp + b"\x00\x00"  # empty pascal-string name, padded
-    body = (b"AIFC" + b"FVER" + _struct.pack(">II", 4, 0xA2805140)
-            if is_aifc else b"AIFF")
-    body += b"COMM" + _struct.pack(">I", len(comm)) + comm
-    ssnd = _struct.pack(">II", 0, 0) + pcm
-    body += b"SSND" + _struct.pack(">I", len(ssnd)) + ssnd
-    if len(ssnd) & 1:
-        body += b"\x00"
-    return b"FORM" + _struct.pack(">I", len(body)) + body
 
 
 EXIF_META_SCHEMA = (
@@ -1035,480 +188,6 @@ def scrub_gps(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fn, media.schema)
 
 
-def decode_hcom(data: bytes) -> np.ndarray:
-    """HCOM (Mac Sound Tools, Huffman-compressed) → int16 mono samples —
-    the 8th and last sndhdr container family (VERDICT r4 missing #5).
-
-    Layout (pinned against CPython's externally generated test fixture,
-    Lib/test/sndhdrdata/sndhdr.hcom — a SoX-encoded silence clip — whose
-    values confirm every field): 128-byte MacBinary wrapper (b'FSSD' at
-    65, data-fork size u32BE at 83), then the data fork: b'HCOM',
-    huffcount (u32, decoded sample count), checksum, compresstype (0 =
-    absolute, 1 = delta), divisor (sample rate = 22050/divisor),
-    dictsize (u16), the Huffman dictionary as dictsize pairs of s16BE
-    (leftson, rightson) — NO transcription risk: the code table is DATA
-    carried by each file — one pad byte, then the bit stream MSB-first.
-    Tree walk: node with leftson >= 0 is internal (bit 0 → leftson, 1 →
-    rightson); a negative leftson marks a leaf whose signed-byte value is
-    rightson. compresstype 1 accumulates deltas from 0 (mod 256, signed
-    center) — the fixture's silence source decodes to exact silence,
-    which disambiguates the initial-value convention. The checksum field
-    is recorded but not enforced (its exact coverage is not pinnable from
-    the available fixture; a mismatch in the dictionary or stream already
-    fails loudly via the structural checks)."""
-    import struct as _struct
-
-    if data[65:69] != b"FSSD" or data[128:132] != b"HCOM":
-        raise ValueError("not an HCOM (MacBinary FSSD) file")
-    fork = _struct.unpack(">I", data[83:87])[0]
-    huffcount, _checksum, ctype, divisor = _struct.unpack_from(">4I", data, 132)
-    if ctype > 1:
-        raise ValueError(f"HCOM compresstype {ctype} is reserved")
-    if divisor == 0 or divisor > 4:
-        raise ValueError(f"HCOM divisor {divisor} out of range 1..4")
-    (dictsize,) = _struct.unpack_from(">H", data, 148)
-    p = 150
-    dic = []
-    for _ in range(dictsize):
-        l_, r_ = _struct.unpack_from(">hh", data, p)
-        dic.append((l_, r_))
-        p += 4
-    if not dic:
-        raise ValueError("HCOM empty dictionary")
-    for l_, r_ in dic:
-        if l_ >= dictsize or (l_ >= 0 and (r_ < 0 or r_ >= dictsize)):
-            raise ValueError("HCOM dictionary node out of range")
-    p += 1  # pad byte
-    end = min(len(data), 128 + fork)
-    bits = np.unpackbits(np.frombuffer(data[p:end], dtype=np.uint8))
-    out = np.empty(huffcount, dtype=np.int16)
-    cur = 0
-    bi = 0
-    for i in range(huffcount):
-        e = 0
-        while dic[e][0] >= 0:
-            if bi >= len(bits):
-                raise ValueError(
-                    f"HCOM bit stream exhausted at sample {i}/{huffcount}"
-                )
-            e = dic[e][1] if bits[bi] else dic[e][0]
-            bi += 1
-        datum = dic[e][1]
-        if ctype:
-            cur = ((cur + datum + 128) & 0xFF) - 128  # signed byte wrap
-        else:
-            cur = ((datum + 128) & 0xFF) - 128
-        out[i] = cur << 8
-    return out
-
-
-def decode_sndt(data: bytes) -> np.ndarray:
-    """SoundTool .sndt → int16 mono samples: b'SOUND\\x1a' magic,
-    n_samples u32LE at 8, rate u16LE at 20, 124-byte header, unsigned
-    8-bit PCM (layout pinned against CPython's externally generated
-    sndhdr.sndt fixture: its silence source decodes to |s| <= 1 LSB)."""
-    import struct as _struct
-
-    if data[:6] != b"SOUND\x1a":
-        raise ValueError("not a SoundTool .sndt file")
-    n = _struct.unpack_from("<I", data, 8)[0]
-    body = data[124 : 124 + n]
-    if len(body) < n:
-        raise ValueError(f"sndt truncated: {len(body)}/{n} samples")
-    return ((np.frombuffer(body, dtype=np.uint8).astype(np.int16) - 128) << 8)
-
-
-def decode_sndr(data: bytes) -> np.ndarray:
-    """Sounder .sndr → int16 mono samples: u16LE 0 (PCM mode), u16LE rate
-    (sndhdr accepts 4000..25000), two reserved u16s, unsigned 8-bit PCM
-    from offset 8. No external fixture exists anywhere in this sandbox;
-    the stdlib sndhdr parser is the (header-level) oracle in tests."""
-    import struct as _struct
-
-    if data[:2] != b"\x00\x00":
-        raise ValueError("not a Sounder .sndr file")
-    rate = _struct.unpack_from("<H", data, 2)[0]
-    if not (4000 <= rate <= 25000):
-        raise ValueError(f"sndr rate {rate} outside sndhdr's 4000..25000")
-    return ((np.frombuffer(data[8:], dtype=np.uint8).astype(np.int16) - 128) << 8)
-
-
-def decode_audio(data: bytes) -> np.ndarray:
-    """Polymorphic audio reader: SYNA, WAV (PCM/float/G.711/ADPCM), AU,
-    AIFF/AIFC or FLAC → int16 mono samples. mp3/aac stay codec seams."""
-    if data[:4] == SYNA_MAGIC:
-        return decode_syna(data)
-    if data[:4] == b"RIFF":
-        if data[8:12] == b"AVI ":
-            # soundtrack extraction: the AVI demux re-wraps the PCM audio
-            # stream as a standalone WAVE, one sample decoder for both
-            from ..avi import avi_audio_bytes
-
-            return decode_wav(avi_audio_bytes(data))
-        return decode_wav(data)
-    if data[:4] == b".snd":
-        return decode_au(data)
-    if data[:4] == b"FORM" and data[8:12] in (b"AIFF", b"AIFC"):
-        return decode_aiff(data)
-    if data[:4] == b"FORM" and data[8:12] == b"8SVX":
-        return decode_8svx(data)
-    if data[:20] == _VOC_MAGIC:
-        return decode_voc(data)
-    if data[:4] == b"OggS":
-        from ..ogg import decode_ogg
-
-        return decode_ogg(data)
-    if data[:4] == b"fLaC":
-        from ..flac import decode_flac, to_mono_int16
-
-        s, _rate, bps = decode_flac(data)
-        return to_mono_int16(s, bps)
-    if len(data) >= 132 and data[65:69] == b"FSSD" and data[128:132] == b"HCOM":
-        return decode_hcom(data)
-    if data[:6] == b"SOUND\x1a":
-        return decode_sndt(data)
-    if data[:3] == b"ID3" or (
-        len(data) >= 2 and data[0] == 0xFF and (data[1] & 0xE0) == 0xE0
-    ):
-        # generic MPEG frame sync (11 set bits) routes every MPEG-1/2/2.5
-        # layer and ADTS AAC variant (0xFFFB/FA/F3/F2/F1/E_) to the codec
-        # seam, not the unknown-format error (ADVICE r2 #4)
-        raise NotImplementedError("mp3/aac decode is a codec seam")
-    if (
-        len(data) > 8
-        and data[:2] == b"\x00\x00"
-        and 4000 <= int.from_bytes(data[2:4], "little") <= 25000
-    ):
-        # weakest magic in the family (sndhdr's own criterion) — last
-        return decode_sndr(data)
-    raise ValueError("unknown audio format")
-
-
-# -- video metadata (header-level, no sample decode needed) -----------------
-
-VIDEO_META_SCHEMA = (
-    "media_ref string, format string, codec string, width int, height int, "
-    "n_frames int, n_tracks int, duration_s double"
-)
-
-
-def video_metadata(data: bytes) -> dict:
-    """Header-level video/container metadata: SYNV (frame count + dims from
-    the first SYNF header), ISO-BMFF mp4 (mvhd duration + per-track sample
-    counts), GIF (logical-screen dims + frame count), AVI (avih dims +
-    stream headers). The survey stage before deciding what to transcode."""
-    import struct
-
-    if data[:4] == SYNV_MAGIC:
-        (n,) = struct.unpack_from("<I", data, 4)
-        w = h = -1
-        if n and len(data) >= 20:
-            # first frame payload: SYNF magic + u32le w, h
-            (flen,) = struct.unpack_from("<I", data, 8)
-            if flen >= 12 and data[12:16] == b"SYNF":
-                w, h = struct.unpack_from("<II", data, 16)
-        return {"format": "synv", "codec": "synf", "width": w, "height": h,
-                "n_frames": int(n), "n_tracks": 1, "duration_s": -1.0}
-    if len(data) >= 12 and data[4:8] == b"ftyp":
-        from ..mp4 import mp4_metadata
-
-        m = mp4_metadata(data)
-        vids = [t for t in m["tracks"] if t["handler"] == "vide"]
-        lead = vids[0] if vids else m["tracks"][0]
-        return {"format": "mp4", "codec": lead["codec"], "width": -1,
-                "height": -1, "n_frames": lead["n_samples"],
-                "n_tracks": m["n_tracks"], "duration_s": m["duration_s"]}
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        w, h = struct.unpack_from("<HH", data, 6)
-        # frame count = image descriptors; reuse the real parser (GIF blobs
-        # are small; the structural walk and the decode share the cost)
-        from ..gif import gif_frames
-
-        n = len(gif_frames(data))
-        return {"format": "gif", "codec": "gif_lzw", "width": int(w),
-                "height": int(h), "n_frames": n, "n_tracks": 1,
-                "duration_s": -1.0}
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        from ..avi import avi_metadata
-
-        return avi_metadata(data)
-    if data[:8] == K.PNG_MAGIC:
-        from ..apng import apng_metadata, is_apng
-
-        if is_apng(data):
-            return apng_metadata(data)
-        # a still PNG is a 1-frame "video" for the sampling path
-        w, h = struct.unpack_from(">II", data, 16)
-        return {"format": "png", "codec": "png_deflate", "width": int(w),
-                "height": int(h), "n_frames": 1, "n_tracks": 1,
-                "duration_s": -1.0}
-    raise ValueError("unknown video format")
-
-
-def video_meta(videos: DataFrame) -> DataFrame:
-    """videos(media_ref, video binary) → header-level metadata rows, one
-    Arrow crossing, no shuffle (companion to audio_meta/media_metadata)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_ref": [], "format": [], "codec": [], "width": [],
-                   "height": [], "n_frames": [], "n_tracks": [], "duration_s": []}
-            for ref, blob in zip(pdf["media_ref"], pdf["video"]):
-                try:
-                    m = video_metadata(bytes(blob))
-                except (ValueError, NotImplementedError, IndexError,
-                        _struct.error):
-                    m = {"format": "unsupported", "codec": "", "width": -1,
-                         "height": -1, "n_frames": -1, "n_tracks": -1,
-                         "duration_s": -1.0}
-                out["media_ref"].append(ref)
-                for k, v in m.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return videos.select("media_ref", "video").mapInPandas(fn, VIDEO_META_SCHEMA)
-
-
-# -- audio metadata (header-level, no sample decode needed) -----------------
-
-#: MPEG audio bitrate tables, kbps (ISO/IEC 11172-3 / 13818-3), index 1-14
-# MPEG bitrate/rate tables live in ..mpegaudio (the frame-walk module);
-# aliased here for the header-level dispatch
-from ..mpegaudio import BITRATES as _MP3_BITRATE, RATES as _MP3_RATES  # noqa: E402
-#: ADTS sampling_frequency_index (ISO/IEC 14496-3)
-_ADTS_RATES = [96000, 88200, 64000, 48000, 44100, 32000, 24000, 22050,
-               16000, 12000, 11025, 8000, 7350]
-
-AUDIO_META_SCHEMA = (
-    "media_ref string, format string, codec string, sample_rate int, "
-    "channels int, bits int, n_samples bigint, duration_s double"
-)
-
-
-def _id3v2_size(data: bytes) -> int:
-    """Bytes occupied by a leading ID3v2 tag (syncsafe 28-bit size), else 0."""
-    if data[:3] != b"ID3" or len(data) < 10:
-        return 0
-    sz = (data[6] << 21) | (data[7] << 14) | (data[8] << 7) | data[9]
-    return 10 + sz
-
-
-def audio_metadata(data: bytes) -> dict:
-    """Header-level audio metadata — format, codec, rate, channels, bits,
-    sample count and duration — WITHOUT decoding samples. SYNA/WAV/FLAC are
-    exact (shared parsers); mp3 and ADTS AAC are parsed from the first frame
-    header (public ISO/IEC 11172-3 / 14496-3 tables) with duration estimated
-    from the byte count at the first frame's bitrate (exact for CBR, an
-    estimate for VBR — documented); sample DECODE for both stays the
-    NotImplementedError seam in decode_audio. Unknown fields are -1/None."""
-    import struct
-
-    if data[:4] == SYNA_MAGIC:
-        (n,) = struct.unpack_from("<I", data, 4)
-        return {"format": "syna", "codec": "pcm16", "sample_rate": 16000,
-                "channels": 1, "bits": 16, "n_samples": n,
-                "duration_s": n / 16000.0}
-    if data[:4] == b"OggS":
-        from ..ogg import ogg_metadata
-
-        return ogg_metadata(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        # AVI soundtrack: demux the audio stream to a WAVE and re-enter
-        from ..avi import avi_audio_bytes
-
-        m = audio_metadata(avi_audio_bytes(data))
-        m["format"] = "avi"
-        return m
-    if data[:4] == b"RIFF":
-        # reuse decode_wav's fmt walk cheaply: find the fmt chunk
-        pos, fmt = 12, None
-        while pos + 8 <= len(data):
-            cid, sz = data[pos:pos + 4], struct.unpack_from("<I", data, pos + 4)[0]
-            if cid == b"fmt ":
-                fmt = data[pos + 8 : pos + 8 + sz]
-            if cid == b"data":
-                data_sz = sz
-                break
-            pos += 8 + sz + (sz & 1)
-        else:
-            data_sz = 0
-        if fmt is None or len(fmt) < 16:
-            raise ValueError("WAV missing fmt chunk")
-        audio_fmt, n_ch, rate, _br, block, bits = struct.unpack_from("<HHIIHH", fmt)
-        if audio_fmt == 0xFFFE and len(fmt) >= 26:
-            audio_fmt = struct.unpack_from("<H", fmt, 24)[0]
-        codec = {1: f"pcm{bits}", 3: f"float{bits}", 6: "alaw", 7: "ulaw",
-                 0x11: "adpcm"}.get(audio_fmt, f"wav_fmt_{audio_fmt}")
-        n = (data_sz // block) if block else -1
-        if audio_fmt == 0x11:  # IMA ADPCM: samples/block from the codec math
-            n = -1
-        return {"format": "wav", "codec": codec, "sample_rate": int(rate),
-                "channels": int(n_ch), "bits": int(bits), "n_samples": n,
-                "duration_s": (n / rate) if n >= 0 and rate else -1.0}
-    if data[:4] == b".snd":
-        if len(data) < 24:
-            raise ValueError("AU header truncated")
-        _off, size, enc, rate, n_ch = struct.unpack_from(">5I", data, 4)
-        codec, w = _AU_ENCODINGS.get(enc, (f"au_enc_{enc}", 0))
-        bits = {1: 8, 27: 8}.get(enc, w * 8) if w else -1
-        n = (size // (w * n_ch)) if (w and n_ch and size != 0xFFFFFFFF) else -1
-        return {"format": "au", "codec": codec, "sample_rate": int(rate),
-                "channels": int(n_ch), "bits": bits, "n_samples": n,
-                "duration_s": (n / rate) if n >= 0 and rate else -1.0}
-    if data[:4] == b"FORM" and data[8:12] in (b"AIFF", b"AIFC"):
-        is_aifc, n_ch, n_frames, bits, rate, comp, _ssnd = _parse_aiff_chunks(
-            data)
-        codec = _AIFC_CODECS.get(comp.upper(), comp.decode("latin1").strip())
-        if codec == "pcm":
-            codec = f"pcm{bits}"
-        return {"format": "aifc" if is_aifc else "aiff", "codec": codec,
-                "sample_rate": int(rate), "channels": int(n_ch),
-                "bits": int(bits), "n_samples": int(n_frames),
-                "duration_s": (n_frames / rate) if rate else -1.0}
-    if data[:4] == b"FORM" and data[8:12] == b"8SVX":
-        n_per_ch, rate, comp, n_ch, body = _parse_8svx(data)
-        n = len(body) // n_ch if comp == 0 else n_per_ch or -1
-        if comp == 0 and n_per_ch:
-            n = min(n, n_per_ch)
-        return {"format": "8svx",
-                "codec": "pcm8" if comp == 0 else "fib_delta",
-                "sample_rate": int(rate), "channels": n_ch, "bits": 8,
-                "n_samples": n,
-                "duration_s": (n / rate) if n >= 0 and rate else -1.0}
-    if data[:20] == _VOC_MAGIC:
-        # n_samples/duration span the WHOLE file (matching decode_voc's
-        # concatenation); rate/channels/bits/codec describe the first
-        # sound block
-        first = first_any = None
-        total_n, dur = 0, 0.0
-        for _s, n, rate, n_ch, bits, codec in _voc_scan(
-                data, want_samples=False):
-            if first is None and codec != "silence":
-                first = (rate, n_ch, bits, codec)
-            if first_any is None:
-                first_any = (rate, n_ch, bits, codec)
-            total_n += n
-            dur += (n / rate) if rate else 0.0
-        first = first or first_any  # silence-only files stay decodable
-        if first is None:
-            raise ValueError("VOC contains no sound blocks")
-        rate, n_ch, bits, codec = first
-        return {"format": "voc", "codec": codec, "sample_rate": rate,
-                "channels": n_ch, "bits": bits, "n_samples": total_n,
-                "duration_s": round(dur, 6)}
-    if data[:4] == b"fLaC":
-        if len(data) < 26:
-            raise ValueError("FLAC too short for STREAMINFO")
-        si = data[8:]  # first metadata block must be STREAMINFO (34 bytes)
-        rate = (si[10] << 12) | (si[11] << 4) | (si[12] >> 4)
-        n_ch = ((si[12] >> 1) & 0x7) + 1
-        bps = (((si[12] & 1) << 4) | (si[13] >> 4)) + 1
-        n = ((si[13] & 0x0F) << 32) | struct.unpack_from(">I", si, 14)[0]
-        return {"format": "flac", "codec": "flac", "sample_rate": rate,
-                "channels": n_ch, "bits": bps, "n_samples": n,
-                "duration_s": (n / rate) if rate else -1.0}
-    if len(data) >= 152 and data[65:69] == b"FSSD" and data[128:132] == b"HCOM":
-        huff, _ck, _ct, dv = struct.unpack_from(">4I", data, 132)
-        rate = 22050 // dv if dv else -1
-        return {"format": "hcom", "codec": "hcom_huffman", "sample_rate": rate,
-                "channels": 1, "bits": 8, "n_samples": huff,
-                "duration_s": (huff / rate) if rate > 0 else -1.0}
-    if data[:6] == b"SOUND\x1a":
-        n = struct.unpack_from("<I", data, 8)[0]
-        rate = struct.unpack_from("<H", data, 20)[0]
-        return {"format": "sndt", "codec": "pcm_u8", "sample_rate": rate,
-                "channels": 1, "bits": 8, "n_samples": n,
-                "duration_s": (n / rate) if rate else -1.0}
-    off = _id3v2_size(data)
-    h = data[off : off + 4]
-    if len(h) == 4 and h[0] == 0xFF and (h[1] & 0xE0) == 0xE0:
-        if (h[1] & 0xF6) == 0xF0:  # ADTS AAC: layer 00, MPEG-4/2 syntax
-            # exact frame walk (mpegaudio.adts_frames): each ADTS header
-            # carries its own 13-bit frame_length, so sample counts and
-            # duration are frame-accurate, truncation surfaced
-            from ..mpegaudio import adts_exact_metadata
-
-            m = adts_exact_metadata(data)
-            return {"format": "aac", "codec": "aac_adts",
-                    "sample_rate": m["sample_rate"],
-                    "channels": m["channels"], "bits": -1,
-                    "n_samples": m["n_samples"],
-                    "duration_s": round(m["duration_s"], 4)}
-        # exact frame walk (mpegaudio.py): frame-accurate sample count and
-        # duration + CBR/VBR fact, replacing the first-frame byte-count
-        # ESTIMATE (wrong for VBR/tagged files). Sample decode remains the
-        # documented seam — see mpegaudio's module docstring.
-        from ..mpegaudio import mp3_exact_metadata, parse_frame_header
-
-        f0 = parse_frame_header(h)
-        name = "mp3" if f0["layer"] == 3 else f"mpeg_l{f0['layer']}"
-        m = mp3_exact_metadata(data)
-        kb = m["kbps"] if m["cbr"] else "vbr"
-        return {"format": name, "codec": f"{name}_{kb}kbps",
-                "sample_rate": m["sample_rate"], "channels": m["channels"],
-                "bits": -1, "n_samples": m["n_samples"],
-                "duration_s": round(m["duration_s"], 4)}
-    if (
-        len(data) > 8
-        and data[:2] == b"\x00\x00"
-        and 4000 <= int.from_bytes(data[2:4], "little") <= 25000
-    ):
-        rate = int.from_bytes(data[2:4], "little")
-        n = len(data) - 8
-        return {"format": "sndr", "codec": "pcm_u8", "sample_rate": rate,
-                "channels": 1, "bits": 8, "n_samples": n,
-                "duration_s": n / rate}
-    raise ValueError("unknown audio format")
-
-
-def audio_meta(audio: DataFrame) -> DataFrame:
-    """audio(media_ref, audio binary) → header-level metadata rows, one Arrow
-    crossing, no shuffle (the survey-the-lake stage a 100 TB audio corpus
-    runs before deciding what to transcode)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_ref": [], "format": [], "codec": [], "sample_rate": [],
-                   "channels": [], "bits": [], "n_samples": [], "duration_s": []}
-            for ref, blob in zip(pdf["media_ref"], pdf["audio"]):
-                try:
-                    m = audio_metadata(bytes(blob))
-                except (ValueError, NotImplementedError, IndexError):
-                    m = {"format": "unsupported", "codec": "", "sample_rate": -1,
-                         "channels": -1, "bits": -1, "n_samples": -1,
-                         "duration_s": -1.0}
-                out["media_ref"].append(ref)
-                for k, v in m.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return audio.select("media_ref", "audio").mapInPandas(fn, AUDIO_META_SCHEMA)
-
-
-def audio_features(audio: DataFrame, window: int = 1024) -> DataFrame:
-    """audio(media_ref, audio binary) → per-window RMS + zero-crossing count
-    (the shape of a real feature-extraction stage; one Arrow crossing)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c.name: [] for c in AUDIO_FEATURES_SCHEMA.fields}
-            for ref, blob in zip(pdf["media_ref"], pdf["audio"]):
-                s = decode_audio(bytes(blob)).astype(np.float64)
-                n = len(s)
-                rms = [
-                    float(np.sqrt(np.mean(s[i : i + window] ** 2)))
-                    for i in range(0, n, window)
-                ]
-                zc = int(np.count_nonzero(np.diff(np.signbit(s)))) if n > 1 else 0
-                out["media_ref"].append(ref)
-                out["n_samples"].append(n)
-                out["rms"].append(rms)
-                out["zero_crossings"].append(zc)
-            yield pd.DataFrame(out)
-
-    return audio.select("media_ref", "audio").mapInPandas(fn, AUDIO_FEATURES_SCHEMA)
-
-
 # --------------------------------------------------------------------------
 # Perceptual image hashing — frame-level near-dup for multimodal corpora
 # --------------------------------------------------------------------------
@@ -1536,8 +215,6 @@ def phash64(img: np.ndarray) -> int:
     distance between hashes tracks visual similarity — robust to resize,
     mild noise, and re-encoding, which content (exact) hashes are not.
     Pure float64 numpy: deterministic across partitions/platforms."""
-    from .. import kernels as K
-
     small = K.resize_bilinear(img, _PHASH_N, _PHASH_N).astype(np.float64)
     d = _dct32()
     coef = d @ small @ d.T
@@ -1564,8 +241,6 @@ def phash_frames(media: DataFrame) -> DataFrame:
     (they cannot be near anything)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .. import kernels as K
-
         for pdf in batches:
             refs, hashes = [], []
             for ref, blob in zip(pdf["media_ref"], pdf["image"]):
@@ -1611,86 +286,3 @@ def phash_near_dup_pairs(
         )
     )
 
-
-# -- audio near-dup: energy-contour fingerprint + banded Hamming pairing ----
-
-
-def audio_fingerprint64(samples: np.ndarray, n_windows: int = 65) -> int:
-    """64-bit energy-contour fingerprint — the audio analog of phash64.
-
-    The mono samples split into 65 equal time windows; bit i is set when
-    window i+1's RMS energy exceeds window i's (64 deltas). Comparing
-    CONSECUTIVE energies makes the hash exactly gain-invariant (scaling
-    preserves every comparison) and robust to resampling and lossy
-    re-encoding (windows are fractions of total duration; companding
-    noise rarely flips an energy ordering). Pure float64 numpy —
-    deterministic across partitions and platforms."""
-    s = np.asarray(samples, np.float64)
-    rms = np.array(
-        [float(np.sqrt(np.mean(w * w))) if len(w) else 0.0
-         for w in np.array_split(s, n_windows)]
-    )
-    h = 0
-    for i in range(min(n_windows - 1, 64)):
-        if rms[i + 1] > rms[i]:
-            h |= 1 << i
-    return h - (1 << 64) if h >= 1 << 63 else h  # signed 64-bit for Spark
-
-
-AUDIO_FP_SCHEMA = StructType(
-    [
-        StructField("media_ref", StringType()),
-        StructField("afp", LongType()),
-    ]
-)
-
-
-def audio_fingerprints(audio: DataFrame) -> DataFrame:
-    """audio(media_ref, audio binary) → (media_ref, afp) — one Arrow
-    crossing through the polymorphic decode_audio; undecodable or
-    codec-seam clips are dropped (they cannot be near anything)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, fps = [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["audio"]):
-                try:
-                    samples = decode_audio(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    continue
-                refs.append(ref)
-                fps.append(audio_fingerprint64(samples))
-            yield pd.DataFrame({"media_ref": refs, "afp": fps})
-
-    return audio.select("media_ref", "audio").mapInPandas(fn, AUDIO_FP_SCHEMA)
-
-
-def audio_near_dup_pairs(
-    audio: DataFrame, max_hamming: int = 8, max_bucket: int | None = 4096
-) -> DataFrame:
-    """Clip-level near-duplicate pairs: the energy-contour fingerprint
-    paired through the SAME banded-pigeonhole machinery as SimHash text
-    dedup and pHash frame dedup (functions/dedup.py simhash_candidates:
-    (max_hamming+1) bands, oversized buckets re-split, exact popcount
-    verify). Gain-changed, companded (A-law/mu-law), and resampled
-    copies of a clip land within max_hamming bits; unrelated audio does
-    not. Returns (ref_a, ref_b, hamming)."""
-    from pyspark.sql import functions as F
-
-    from .dedup import simhash_candidates
-
-    hashes = audio_fingerprints(audio).select(
-        F.col("media_ref").alias("doc_id"), F.col("afp").alias("simhash")
-    )
-    cand = simhash_candidates(
-        hashes, bits=64, max_hamming=max_hamming, max_bucket=max_bucket
-    )
-    return (
-        cand.withColumn("hamming", F.expr("bit_count(sim_a ^ sim_b)"))
-        .where(F.col("hamming") <= max_hamming)
-        .select(
-            F.col("doc_a").alias("ref_a"),
-            F.col("doc_b").alias("ref_b"),
-            "hamming",
-        )
-    )

@@ -4,8 +4,8 @@ Beyond-reference video-container surface: the ISO base media file format
 (ISO/IEC 14496-12, public spec) is the container behind .mp4/.mov/.m4a.
 This module implements the DEMUX layer for real — box tree walk,
 trak→mdia→minf→stbl sample tables (stsd codec entry, stsc
-chunk-mapping runs, stsz sizes, stco/co64 chunk offsets) — so frame
-sampling over an mp4 column does genuine container work. Two sample
+chunk-mapping runs, stsz sizes, stco/co64 chunk offsets). No product
+surface imports this module (see tests/test_surface_reach.py). Two sample
 entries decode end-to-end: the private 'synf' entry (raw SYNF frame per
 sample, structurally a legal ISO-BMFF SampleEntry) and QuickTime
 Photo-JPEG ('jpeg' — every sample is a complete baseline JPEG, routed

@@ -1,7 +1,7 @@
 """Ogg container demux (+ fixture muxer) in pure stdlib.
 
-Beyond-reference audio-container surface, same policy as avi.py/mp4.py:
-the container layer is implemented for real — page capture, the Ogg
+Beyond-reference audio-container surface, same policy as mp4.py: the
+container layer is implemented for real — page capture, the Ogg
 CRC-32 (poly 0x04C11DB7, init 0, no reflection, CRC field zeroed),
 per-stream page-sequence continuity + continuation-flag consistency (a
 dropped page is caught at the demux layer, not left for a downstream
@@ -206,8 +206,8 @@ def decode_ogg(data: bytes) -> np.ndarray:
 
 
 def ogg_metadata(data: bytes) -> dict:
-    """Header-level metadata for audio_metadata(): codec, rate, channels
-    from the BOS headers (no sample decode)."""
+    """Header-level metadata: codec, rate, channels from the BOS headers
+    (no sample decode)."""
     streams = parse_ogg(data)
     st = _first_audio(streams, {"flac", "vorbis", "opus", "speex"}) \
         if streams else None

@@ -25,10 +25,14 @@ _OS_EXIF_JPG = (
 _OS_PLAIN_JPG = "/usr/share/doc/nodejs/thin-white-stripe.jpg"
 
 
-def _gps_exif_app1(endian: str) -> bytes:
-    """A hand-built APP1 Exif payload: IFD0 {orientation=6, GPSInfo ->
-    GPS IFD} with lat 37;46;30 N, lon 122;25;10 W."""
+def _gps_exif_app1(endian: str, ifd0_entries=None) -> bytes:
+    """A hand-built APP1 Exif payload: IFD0 {``ifd0_entries`` (default
+    orientation=6), GPSInfo -> GPS IFD} with lat 37;46;30 N, lon
+    122;25;10 W. Entries are (tag, type, count, value bytes) in ``endian``
+    order, sorted by tag."""
     fmt = "<" if endian == "II" else ">"
+    if ifd0_entries is None:
+        ifd0_entries = [(0x0112, 3, 1, struct.pack(fmt + "H", 6))]
 
     def ifd(entries, ifd_off, tail_vals):
         n = len(entries)
@@ -45,10 +49,15 @@ def _gps_exif_app1(endian: str) -> bytes:
     def rat3(a, b, c):
         return b"".join(struct.pack(fmt + "II", x, 1) for x in (a, b, c))
 
-    # GPS IFD will live after IFD0; compute sizes: IFD0 has 2 entries
-    ifd0_off = 8
-    ifd0_size = 2 + 12 * 2 + 4
-    gps_off = ifd0_off + ifd0_size
+    def ifd0(gps_off):
+        return ifd(
+            ifd0_entries + [(0x8825, 4, 1, struct.pack(fmt + "I", gps_off))],
+            8,
+            None,
+        )
+
+    # the GPS IFD lives right after IFD0 and its out-of-line values
+    gps_off = 8 + len(ifd0(0))
     gps_entries = [
         (0x0001, 2, 2, b"N\x00"),
         (0x0002, 5, 3, rat3(37, 46, 30)),
@@ -56,23 +65,15 @@ def _gps_exif_app1(endian: str) -> bytes:
         (0x0004, 5, 3, rat3(122, 25, 10)),
     ]
     gps = ifd(gps_entries, gps_off, None)
-    ifd0 = ifd(
-        [
-            (0x0112, 3, 1, struct.pack(fmt + "H", 6)),
-            (0x8825, 4, 1, struct.pack(fmt + "I", gps_off)),
-        ],
-        ifd0_off,
-        None,
-    )
     hdr = (b"II*\x00" if endian == "II" else b"MM\x00*") + struct.pack(
         fmt + "I", 8
     )
-    tiff = hdr + ifd0 + gps
+    tiff = hdr + ifd0(gps_off) + gps
     return b"Exif\x00\x00" + tiff
 
 
-def _with_gps(jpeg: bytes, endian: str) -> bytes:
-    payload = _gps_exif_app1(endian)
+def _with_gps(jpeg: bytes, endian: str, ifd0_entries=None) -> bytes:
+    payload = _gps_exif_app1(endian, ifd0_entries)
     seg = b"\xff\xe1" + struct.pack(">H", len(payload) + 2) + payload
     return jpeg[:2] + seg + jpeg[2:]
 
@@ -192,6 +193,49 @@ def test_scrub_gps_fails_closed_on_unscrubbable_tiff(spark):
     assert bytes(scrub_gps(other).collect()[0]["image"]) == (
         b"not an image container"
     )
+
+
+# A safe tag stored as the wrong TIFF type, or with a value the scrub's
+# re-pack cannot hold: (IFD0 entry, the parse_exif field it would feed).
+_MISTYPED_SAFE_TAGS = {
+    "orientation_ascii": ((0x0112, 2, 4, b"abc\x00"), "orientation"),
+    "datetime_short": ((0x0132, 3, 1, struct.pack("<H", 7)), "datetime"),
+    "orientation_long_70000": (
+        (0x0112, 4, 1, struct.pack("<I", 70000)), "orientation"),
+    "x_resolution_overflow": (
+        (0x011A, 5, 1, struct.pack("<II", 10**6, 1)), "x_resolution"),
+}
+
+
+@pytest.mark.skipif(not glob.os.path.exists(_OS_PLAIN_JPG),
+                    reason="OS plain JPEG absent")
+@pytest.mark.parametrize("case", sorted(_MISTYPED_SAFE_TAGS))
+def test_mistyped_safe_tag_dropped_by_census_and_scrub(spark, case):
+    """A mistyped safe tag is dropped like a missing one: the census row
+    reports it as null instead of failing the Arrow batch, and the scrub
+    rewrites the frame without GPS instead of failing the job."""
+    from ai_invoice_ocr_engine_spark.functions.multimodal import (
+        exif_meta,
+        scrub_gps,
+    )
+
+    entry, field = _MISTYPED_SAFE_TAGS[case]
+    base = open(_OS_PLAIN_JPG, "rb").read()
+    tagged = _with_gps(base, "II", [entry])
+    media = spark.createDataFrame(
+        [(case, bytearray(tagged))], "media_ref string, image binary"
+    )
+    (row,) = exif_meta(media).collect()
+    assert row["has_exif"] and row["has_gps"]
+    if field in row.asDict():
+        assert row[field] is None
+
+    (out,) = scrub_gps(media).collect()
+    scrubbed = bytes(out["image"])
+    m = parse_exif(scrubbed)
+    assert m["has_exif"] and m["has_gps"] is False and field not in m
+    assert np.array_equal(decode_image(scrubbed), decode_image(base))
+    assert field not in parse_exif(tagged)
 
 
 @pytest.mark.skipif(not glob.os.path.exists(_OS_PLAIN_JPG),
@@ -531,3 +575,43 @@ def test_property_arbitrary_exif_never_breaks_scrub(
     assert m2["orientation"] == orientation
     assert np.array_equal(decode_image(tagged), decode_image(s))
     assert scrub_exif(s) == s
+
+
+_SAFE_IFD0_TAGS = [0x0112, 0x011A, 0x011B, 0x0128, 0x0132]
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    endian=st.sampled_from(["II", "MM"]),
+    safe=st.lists(
+        st.tuples(
+            st.sampled_from(_SAFE_IFD0_TAGS),
+            st.one_of(st.integers(0, 12), st.integers(0, 0xFFFF)),  # type
+            st.integers(0, 3),                                      # count
+            st.binary(min_size=0, max_size=16),                     # value
+        ),
+        max_size=len(_SAFE_IFD0_TAGS),
+        unique_by=lambda e: e[0],
+    ),
+)
+def test_property_mistyped_safe_tags_never_break_scrub(endian, safe):
+    """The whitelisted IFD0 tags stored with ARBITRARY types, counts and
+    values next to a GPS IFD: parse reports only values the census schema
+    takes, and scrub never raises and never leaves GPS behind."""
+    if not glob.os.path.exists(_OS_PLAIN_JPG):
+        pytest.skip("OS plain JPEG absent")
+    base = open(_OS_PLAIN_JPG, "rb").read()
+    entries = []
+    for tag, typ, cnt, raw in sorted(safe):
+        size = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}.get(typ, 1)
+        entries.append((tag, typ, cnt, raw[: cnt * size].ljust(cnt * size, b"\x00")))
+    tagged = _with_gps(base, endian, entries)
+
+    m = parse_exif(tagged)
+    assert m["has_exif"] and m["has_gps"]
+    for name in ("orientation", "resolution_unit"):
+        assert m.get(name) is None or 0 <= m[name] <= 0xFFFF
+    assert m.get("datetime") is None or isinstance(m["datetime"], str)
+    s = scrub_exif(tagged)
+    assert parse_exif(s)["has_gps"] is False
+    assert np.array_equal(decode_image(tagged), decode_image(s))

@@ -1,7 +1,7 @@
 """FLAC codec tests: exact lossless round-trips across subframe types,
 channel decorrelation modes, bit depths, block sizes and wasted bits;
-integrity checks (CRC-8 / CRC-16 / MD5) verified to actually fire; the
-error contract; and the decode_audio routing."""
+integrity checks (CRC-8 / CRC-16 / MD5) verified to actually fire; and
+the error contract."""
 
 import numpy as np
 import pytest
@@ -150,29 +150,3 @@ def test_fuzz_error_contract():
             decode_flac(junk)
         except (ValueError, NotImplementedError):
             pass
-
-
-# --------------------------------------------------------------------------
-# Routing
-# --------------------------------------------------------------------------
-
-
-def test_decode_audio_routes_flac():
-    from ai_invoice_ocr_engine_spark.functions.multimodal import decode_audio
-
-    s = _sig(1000, 8).astype(np.int16)
-    out = decode_audio(encode_flac(s))
-    assert np.array_equal(out, s.astype(np.int16))
-    # 24-bit reduces by declared depth (>> 8), not by data peak
-    s24 = (s.astype(np.int64) << 8) | 0x5
-    out24 = decode_audio(encode_flac(s24, bps=24))
-    assert np.array_equal(out24, ((s24 >> 8)).astype(np.int16))
-
-
-def test_decode_audio_stereo_flac_averages():
-    from ai_invoice_ocr_engine_spark.functions.multimodal import decode_audio
-
-    st = _sig(900, 11, ch=2)
-    out = decode_audio(encode_flac(st, channel_mode="mid_side"))
-    want = st.mean(axis=1).astype(np.int64).astype(np.int16)
-    assert np.array_equal(out, want)

@@ -240,68 +240,6 @@ def test_ivf_probed_recall_and_scan_fraction(emb_df):
     assert max(sizes.values()) < total  # more than one non-empty cluster
 
 
-def test_video_frame_sampling(spark, corpus):
-    """SYNV container round-trip + every-n frame sampling via row-expanding
-    mapInPandas; sampled frames decode identically to the originals."""
-    import numpy as np
-
-    from ai_invoice_ocr_engine_spark import kernels as K
-    from ai_invoice_ocr_engine_spark.functions import multimodal as M
-
-    rng = np.random.default_rng(9)
-    videos = []
-    n_frames = [5, 1, 8]
-    for vid, nf in enumerate(n_frames):
-        frames = [
-            K.encode_synf(rng.integers(0, 256, size=(16, 16), dtype=np.uint8))
-            for _ in range(nf)
-        ]
-        videos.append((f"v{vid}", M.encode_synv(frames)))
-    df = spark.createDataFrame(videos, "media_ref string, video binary")
-    out = M.sample_video_frames(df, every_n=2).collect()
-    expect = sum((nf + 1) // 2 for nf in n_frames)
-    assert len(out) == expect
-    assert all(r.frame_idx % 2 == 0 for r in out)
-    for r in out:
-        ref_frames = dict(videos)[r.media_ref]
-        assert bytes(r.image) == M.decode_synv(ref_frames)[r.frame_idx]
-
-
-def test_audio_features(spark):
-    """SYNA round-trip + windowed RMS/zero-crossing features match a direct
-    numpy computation."""
-    import numpy as np
-
-    from ai_invoice_ocr_engine_spark.functions import multimodal as M
-
-    t = np.arange(4000)
-    tone = (10000 * np.sin(t * 0.05)).astype(np.int16)
-    silent = np.zeros(100, np.int16)
-    df = spark.createDataFrame(
-        [("a", M.encode_syna(tone)), ("s", M.encode_syna(silent))],
-        "media_ref string, audio binary",
-    )
-    rows = {r.media_ref: r for r in M.audio_features(df, window=1024).collect()}
-    assert rows["a"].n_samples == 4000 and len(rows["a"].rms) == 4
-    want_rms0 = float(np.sqrt(np.mean(tone[:1024].astype(np.float64) ** 2)))
-    assert abs(rows["a"].rms[0] - want_rms0) < 1e-3
-    assert rows["a"].zero_crossings > 50
-    assert rows["s"].zero_crossings == 0 and max(rows["s"].rms) == 0.0
-
-
-def test_video_audio_codec_stubs():
-    import pytest as _pytest
-
-    from ai_invoice_ocr_engine_spark.functions import multimodal as M
-
-    with _pytest.raises(NotImplementedError):
-        M.decode_synv(b"\x00\x00\x00\x18ftypmp42....")
-    with _pytest.raises(ValueError):  # RIFF routes to the real WAV decoder now
-        M.decode_audio(b"RIFF....WAVE")
-    with _pytest.raises(ValueError):
-        M.decode_synv(b"garbage.....")
-
-
 def test_minhash_fast_hash_finds_exact_dups(text_df):
     """xxhash64 MinHash (the at-scale hash) must find every EXACT duplicate
     pair — the only hash-family-independent guarantee (identical texts have
@@ -380,61 +318,6 @@ def test_connected_components_star_adversarial_chain(spark):
     assert all(r["cluster_id"] == "d000" and r["n_members"] == n for r in rows)
     with _pytest.raises(RuntimeError, match="did not converge"):
         D.connected_components_labels(pairs, max_iter=25).collect()
-
-
-def test_wav_codec_and_polymorphic_audio(spark):
-    """PCM WAV is a real decoder now: 16-bit round-trip exact, 8-bit and
-    stereo reduce deterministically, audio_features accepts a WAV column
-    next to SYNA blobs (one decode_audio definition)."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from ai_invoice_ocr_engine_spark.functions import multimodal as M
-
-    rng = np.random.default_rng(5)
-    s = rng.integers(-3000, 3000, 2048).astype(np.int16)
-    wav = M.encode_wav(s, sample_rate=8000)
-    assert np.array_equal(M.decode_wav(wav), s)
-    assert np.array_equal(M.decode_audio(wav), s)
-    assert np.array_equal(M.decode_audio(M.encode_syna(s)), s)
-
-    # 8-bit unsigned: (v - 128) << 8
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    raw8 = bytes([0, 128, 255, 200])
-    body += b"data" + struct.pack("<I", len(raw8)) + raw8
-    wav8 = b"RIFF" + struct.pack("<I", len(body)) + body
-    assert M.decode_wav(wav8).tolist() == [-32768, 0, 32512, 18432]
-
-    # stereo averages to mono
-    st = np.array([100, 200, -100, -200], np.int16)  # 2 frames x 2ch
-    fmt2 = struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
-    body2 = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt2)) + fmt2
-    body2 += b"data" + struct.pack("<I", st.nbytes) + st.tobytes()
-    wav2 = b"RIFF" + struct.pack("<I", len(body2)) + body2
-    assert M.decode_wav(wav2).tolist() == [150, -150]
-
-    # contracts
-    with pytest.raises(NotImplementedError):  # non-PCM format code
-        bad_fmt = struct.pack("<HHIIHH", 85, 1, 8000, 8000, 2, 16)
-        b3 = b"WAVE" + b"fmt " + struct.pack("<I", len(bad_fmt)) + bad_fmt
-        b3 += b"data" + struct.pack("<I", 0)
-        M.decode_wav(b"RIFF" + struct.pack("<I", len(b3)) + b3)
-    with pytest.raises(ValueError):
-        M.decode_wav(b"RIFFxxxxNOPE")
-    with pytest.raises(NotImplementedError):
-        M.decode_audio(b"ID3\x04rest")
-
-    # distributed feature stage over a mixed SYNA + WAV column
-    df = spark.createDataFrame(
-        [("a0", bytearray(M.encode_syna(s))), ("a1", bytearray(wav))],
-        "media_ref string, audio binary",
-    )
-    rows = {r["media_ref"]: r for r in M.audio_features(df, window=512).collect()}
-    assert rows["a0"]["n_samples"] == rows["a1"]["n_samples"] == 2048
-    assert rows["a0"]["rms"] == rows["a1"]["rms"]  # same samples, two containers
 
 
 def test_simhash_skew_guard_pathological_bucket(spark):
@@ -774,163 +657,6 @@ def test_repetition_stats_randomized_vs_pure_python(spark):
         assert r.top_bigram_frac == top_frac, doc_id
         assert r.dup_trigram_frac == dup_frac, doc_id
         assert r.keep == keep, doc_id
-
-
-def test_audio_metadata_header_parsers(spark):
-    """audio_metadata: exact for SYNA/WAV/FLAC (shared parsers), frame-header
-    parse for mp3 (ISO 11172-3 tables, ID3v2 skip) and ADTS AAC — while
-    sample DECODE for mp3/aac stays the NotImplementedError seam."""
-    from ai_invoice_ocr_engine_spark.flac import encode_flac
-    from ai_invoice_ocr_engine_spark.functions.multimodal import (
-        audio_meta, audio_metadata, decode_audio, encode_syna, encode_wav_ext)
-
-    t = np.arange(3200)
-    pcm = (1000 * np.sin(2 * np.pi * 440 * t / 16000)).astype(np.int16)
-
-    m = audio_metadata(encode_syna(pcm))
-    assert (m["format"], m["n_samples"], m["duration_s"]) == ("syna", 3200, 0.2)
-
-    m = audio_metadata(encode_wav_ext(pcm, codec="pcm16", sample_rate=8000))
-    assert (m["format"], m["codec"], m["sample_rate"]) == ("wav", "pcm16", 8000)
-    assert m["channels"] == 1 and m["bits"] == 16 and m["n_samples"] == 3200
-
-    m = audio_metadata(encode_wav_ext(pcm, codec="alaw", sample_rate=16000))
-    assert m["codec"] == "alaw" and m["sample_rate"] == 16000
-
-    m = audio_metadata(encode_flac(pcm, sample_rate=22050))
-    assert (m["format"], m["sample_rate"], m["channels"], m["bits"]) == (
-        "flac", 22050, 1, 16)
-    assert m["n_samples"] == 3200 and round(m["duration_s"], 4) == round(3200 / 22050, 4)
-
-    # MPEG1 Layer III CBR stream: bitrate idx 9 = 128 kbps, sr idx 0 =
-    # 44100, joint stereo → 417-byte frames. Metadata is now FRAME-exact
-    # (mpegaudio.py walk), not a byte-count estimate: 38 frames x 1152
-    # samples.
-    frame = bytes([0xFF, 0xFB, 0x90, 0x44]) + b"\x00" * (417 - 4)
-    mp3 = frame * 38
-    m = audio_metadata(mp3)
-    assert (m["format"], m["codec"]) == ("mp3", "mp3_128kbps")
-    assert m["sample_rate"] == 44100 and m["channels"] == 2
-    assert m["n_samples"] == 38 * 1152
-    assert m["duration_s"] == round(38 * 1152 / 44100, 4)
-    with pytest.raises(NotImplementedError):
-        decode_audio(mp3)  # decode stays a seam
-
-    # same stream behind an ID3v2 tag (syncsafe size 100)
-    id3 = b"ID3\x04\x00\x00\x00\x00\x00\x64" + b"\x00" * 100 + mp3
-    m2 = audio_metadata(id3)
-    assert (m2["sample_rate"], m2["channels"], m2["n_samples"]) == (
-        44100, 2, 38 * 1152)
-
-    # a stream that LOSES SYNC after its first frame (header + zero
-    # padding) reports only the frames that actually parse — torn files
-    # surface as short durations, never smoothed to the nominal bitrate
-    torn = audio_metadata(frame + b"\x00" * 15000)
-    assert torn["n_samples"] == 1152
-
-    # MPEG2 Layer III 8 kbps mono, sr idx 0 = 22050
-    m = audio_metadata(bytes([0xFF, 0xF3, 0x10, 0xC4]) + b"\x00" * 96)
-    assert m["codec"] == "mp3_8kbps" and m["sample_rate"] == 22050
-    assert m["channels"] == 1
-
-    # ADTS AAC-LC, sr idx 4 = 44100, channel config 2 — a minimal
-    # well-formed frame (frame_length = 7, header-only); the walk is now
-    # frame-exact so a declared length of 0 would be a torn-stream error
-    m = audio_metadata(bytes([0xFF, 0xF1, 0x50, 0x80, 0x00, 0xE0, 0xFC]))
-    assert (m["format"], m["sample_rate"], m["channels"]) == ("aac", 44100, 2)
-    assert m["n_samples"] == 1024
-
-    with pytest.raises(ValueError):
-        audio_metadata(b"\x00\x01\x02\x03 garbage")
-    with pytest.raises(ValueError):
-        audio_metadata(bytes([0xFF, 0xEB, 0x90, 0x44]))  # reserved version
-    with pytest.raises(ValueError):
-        audio_metadata(bytes([0xFF, 0xFB, 0x04, 0x44]))  # free-format bitrate
-
-    # DataFrame wrapper: one Arrow crossing, bad rows -> 'unsupported'
-    rows = [("a", bytearray(encode_syna(pcm))), ("b", bytearray(mp3)),
-            ("c", bytearray(b"junkjunk"))]
-    df = spark.createDataFrame(rows, "media_ref string, audio binary")
-    got = {r.media_ref: r for r in audio_meta(df).collect()}
-    assert got["a"].format == "syna" and got["a"].n_samples == 3200
-    assert got["b"].codec == "mp3_128kbps" and got["b"].duration_s == 0.9927
-    assert got["c"].format == "unsupported" and got["c"].sample_rate == -1
-
-
-def test_video_metadata_header_parsers(spark):
-    """video_metadata: SYNV frame count + dims, mp4 mvhd duration + track
-    sample counts (decode stays the seam), GIF logical screen + frames."""
-    from ai_invoice_ocr_engine_spark.gif import encode_gif
-    from ai_invoice_ocr_engine_spark.mp4 import encode_mp4
-    from ai_invoice_ocr_engine_spark.functions.multimodal import (
-        decode_synv, encode_synv, video_meta, video_metadata)
-
-    rng = np.random.default_rng(11)
-    frames = [K.encode_synf(rng.integers(0, 256, (24, 32), dtype=np.uint8))
-              for _ in range(3)]
-
-    m = video_metadata(encode_synv(frames))
-    assert (m["format"], m["codec"], m["n_frames"]) == ("synv", "synf", 3)
-    assert (m["width"], m["height"]) == (32, 24)
-
-    mp4 = encode_mp4(frames)
-    m = video_metadata(mp4)
-    assert m["format"] == "mp4" and m["codec"] == "synf"
-    assert m["n_frames"] == 3 and m["n_tracks"] == 1
-    assert m["duration_s"] == 3 / 1000.0  # fixture mvhd: timescale 1000
-    with pytest.raises(NotImplementedError):
-        decode_synv(mp4)  # decode stays the seam
-
-    gif_frames_px = [rng.integers(0, 256, (10, 12), dtype=np.uint8)
-                     for _ in range(2)]
-    m = video_metadata(encode_gif(gif_frames_px))
-    assert (m["format"], m["width"], m["height"], m["n_frames"]) == (
-        "gif", 12, 10, 2)
-
-    with pytest.raises(ValueError):
-        video_metadata(b"\x00" * 32)
-
-    rows = [("s", bytearray(encode_synv(frames))), ("m", bytearray(mp4)),
-            ("bad", bytearray(b"nope"))]
-    df = spark.createDataFrame(rows, "media_ref string, video binary")
-    got = {r.media_ref: r for r in video_meta(df).collect()}
-    assert got["s"].n_frames == 3 and got["s"].width == 32
-    assert got["m"].format == "mp4" and got["m"].n_frames == 3
-    assert got["bad"].format == "unsupported"
-
-
-def test_audio_fingerprint_gain_invariant_unit():
-    t = np.arange(32000)
-    env = 0.2 + 0.8 * (1 + np.sin(t / 2500.0)) / 2
-    sig = env * np.sin(2 * np.pi * 440 * t / 16000)
-    a = M.audio_fingerprint64(sig * 30000)
-    b = M.audio_fingerprint64(sig * 300)  # 40 dB quieter, float-exact
-    assert a == b and a != 0
-
-
-def test_audio_near_dup_pairs(spark):
-    rng = np.random.default_rng(8)
-    n = 48000
-    t = np.arange(n)
-    env = 0.2 + 0.8 * (1 + np.sin(t / 3500.0)) / 2  # ~2 envelope cycles
-    base = (12000 * env * np.sin(2 * np.pi * 440 * t / 16000)).astype(np.int16)
-    half = (base.astype(np.int32) // 2).astype(np.int16)  # -6 dB int copy
-    resamp = np.repeat(base[::2], 2)[:n]  # crude 2x down-up resample
-    noise = (rng.standard_normal(n) * 9000).astype(np.int16)
-    rows = [
-        ("orig", M.encode_wav(base)),
-        ("gain", M.encode_wav(half)),
-        ("resamp", M.encode_wav(resamp)),
-        ("noise", M.encode_wav(noise)),
-        ("seam", b"ID3\x04\x00junk"),  # codec seam: dropped, not fatal
-    ]
-    df = spark.createDataFrame(rows, "media_ref string, audio binary")
-    pairs = {(r["ref_a"], r["ref_b"]): r["hamming"]
-             for r in M.audio_near_dup_pairs(df, max_hamming=8).collect()}
-    keys = set(frozenset(k) for k in pairs)
-    assert frozenset({"orig", "gain"}) in keys
-    assert frozenset({"orig", "resamp"}) in keys
-    assert not any("noise" in k or "seam" in k for k in keys)
 
 
 def test_line_dedup_drops_shared_lines(spark):

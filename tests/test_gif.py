@@ -190,25 +190,3 @@ def test_frame_exceeding_screen_raises():
     data[6:8] = (2).to_bytes(2, "little")  # shrink logical screen width
     with pytest.raises(ValueError, match="exceeds logical screen"):
         decode_gif(bytes(data))
-
-
-# --------------------------------------------------------------------------
-# Spark plumbing: animated GIF through the video frame sampler
-# --------------------------------------------------------------------------
-
-
-def test_sample_video_frames_animated_gif(spark):
-    from ai_invoice_ocr_engine_spark.functions import multimodal as M
-
-    f0 = _img(10, 12, 1)
-    f1 = _img(10, 12, 2)
-    f2 = _img(10, 12, 3)
-    gif = encode_gif([f0, f1, f2])
-    df = spark.createDataFrame([("g1", bytearray(gif))], "media_ref string, video binary")
-    rows = M.sample_video_frames(df, every_n=2).collect()
-    assert [r.frame_idx for r in rows] == [0, 2]
-    # frames composite: every_n=2 keeps frames 0 and 2; frame 2's
-    # composite equals f2 painted over f1 over f0 — full-rect frames, so
-    # it is just f2
-    got = K.decode_image(bytes(rows[1].image))
-    assert np.array_equal(got, f2)

@@ -1,6 +1,7 @@
 """MP4/ISO-BMFF demux tests: sample extraction round-trips through real
 stsc/stsz/stco chunk maps (varied chunking, co64, largesize), the codec
-seam for compressed bitstreams, the error contract, and Spark routing."""
+seam for compressed bitstreams, the error contract, and Photo-JPEG
+samples."""
 
 import struct
 
@@ -59,20 +60,6 @@ def test_compressed_codec_is_a_named_seam():
     # the demux itself succeeded — the message reports the sample count
     with pytest.raises(NotImplementedError, match="3 samples"):
         mp4_frame_payloads(blob)
-
-
-def test_frames_decode_through_video_sampler(spark):
-    from ai_invoice_ocr_engine_spark.functions import multimodal as M
-
-    fr = _frames(5, 9)
-    blob = encode_mp4(fr, chunk_sizes=[2, 3])
-    df = spark.createDataFrame(
-        [("m1", bytearray(blob))], "media_ref string, video binary"
-    )
-    rows = M.sample_video_frames(df, every_n=2).collect()
-    assert [r.frame_idx for r in rows] == [0, 2, 4]
-    for r in rows:
-        assert bytes(r.image) == fr[r.frame_idx]
 
 
 # --------------------------------------------------------------------------

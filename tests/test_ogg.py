@@ -1,17 +1,13 @@
 """Ogg container tests: page CRC (the Ogg-specific CRC-32 variant),
 packet reassembly across lacing values and page boundaries, FLAC-in-Ogg
 end-to-end through the pinned native decoder (STREAMINFO MD5 armed),
-codec seams with BOS metadata, and multimodal routing."""
+and codec seams with BOS metadata."""
 
 import struct
 
 import numpy as np
 import pytest
 
-from ai_invoice_ocr_engine_spark.functions.multimodal import (
-    audio_metadata,
-    decode_audio,
-)
 from ai_invoice_ocr_engine_spark.ogg import (
     _ogg_crc,
     _page,
@@ -120,15 +116,6 @@ def test_error_contract():
     orphan = _page(0x99, 5, 0x00, 0, [b"xx"])
     with pytest.raises(ValueError, match="unknown stream"):
         parse_ogg(orphan)
-
-
-def test_multimodal_routing():
-    sam = _sig(2500, 5)
-    blob = encode_ogg_flac(sam, 16000)
-    np.testing.assert_array_equal(decode_audio(blob), sam)
-    m = audio_metadata(blob)
-    assert m["format"] == "ogg" and m["codec"] == "flac"
-    assert m["n_samples"] == 2500
 
 
 def _recrc_page(blob: bytearray, page_start: int) -> None:
